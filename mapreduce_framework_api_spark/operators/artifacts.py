@@ -1,4 +1,4 @@
-"""Persisted dedup-artifact store: the session caches as an on-disk index
+"""Persisted dedup-artifact store: the session memo as an on-disk index
 layer.
 
 SCALE.md's recurring production note — "a 100 TB pipeline persists this
@@ -16,10 +16,10 @@ stage; see SCALE.md).
 ``out_dir`` with a manifest carrying the source-corpus fingerprint;
 ``load_dedup_artifacts`` validates the fingerprint (a stale store against
 a regenerated corpus is an explicit error, the same staleness contract as
-the in-memory caches' fingerprinted keys) and seeds the session caches,
-so every existing builder — and every registered query downstream of one
-— transparently serves from disk. No query code changes: the cache dicts
-are the seam.
+the in-memory memo's fingerprinted keys) and seeds the session memo
+(``sources.readers.seed_artifact``), so every existing builder — and
+every registered query downstream of one — transparently serves from
+disk. No query code changes: the memo is the seam.
 
 Scale shape: writes are one job per artifact (the build plans already
 exist; parquet adds columnar compression — the shingle arrays are the
@@ -32,7 +32,7 @@ Three stores share the pattern: the dedup kernel artifacts
 (``persist_ingest_indexes``), and the similarity tiers' ANN serving
 indexes (``persist_ann_indexes``). Every persist runs under
 ``_writer_guard`` (re-persist staleness + concurrent-writer protection);
-every load validates the source-table fingerprint before seeding caches.
+every load validates the source-table fingerprint before seeding the memo.
 """
 
 from __future__ import annotations
@@ -46,7 +46,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_framework_api_spark.sources.readers import (
     fixture_fingerprint,
-    session_cache_key,
+    seed_artifact,
 )
 
 _MANIFEST = "manifest.json"
@@ -55,7 +55,7 @@ _MANIFEST = "manifest.json"
 def _write_manifest(out_dir: str, name: str, manifest: dict) -> None:
     """Manifest is written LAST and atomically (tmp + rename): a crash
     mid-persist leaves parquet directories but NO manifest, so a later
-    load fails loudly on the missing file instead of seeding caches from
+    load fails loudly on the missing file instead of seeding the memo from
     a half-written store."""
     tmp = os.path.join(out_dir, name + ".tmp")
     with open(tmp, "w") as f:
@@ -71,7 +71,7 @@ def _writer_guard(out_dir: str, manifest_name: str):
     1. RE-PERSIST STALENESS: a persist over an EXISTING store used to
        leave the old (fingerprint-valid!) manifest in place while the
        parquet directories underneath were being overwritten — a
-       concurrent or crash-interrupted reader could seed caches from a
+       concurrent or crash-interrupted reader could seed the memo from a
        manifest describing data that no longer exists. The old manifest
        is renamed aside (``<name>.stale`` — kept for forensics, never
        read by any loader) at ENTRY, so for the whole write window the
@@ -109,20 +109,20 @@ def _writer_guard(out_dir: str, manifest_name: str):
 
 
 def _artifact_specs():
-    """name -> (builder, cache dict). Resolved lazily so importing this
-    module never forces the operator modules (and their kernels)."""
+    """name -> session-artifact builder. Resolved lazily so importing
+    this module never forces the operator modules (and their kernels)."""
     from mapreduce_framework_api_spark.operators import dedup
 
     return {
-        "shingle_table": (dedup.shingle_table, dedup._SHINGLE_TABLE_CACHE),
-        "minhash_signatures": (dedup.minhash_sig_table, dedup._MINHASH_SIG_CACHE),
-        "scored_pairs": (dedup.scored_pair_table, dedup._SCORED_PAIR_CACHE),
-        "bk_sketches": (dedup._bk_sketch_table, dedup._BK_SKETCH_CACHE),
+        "shingle_table": dedup.shingle_table,
+        "minhash_signatures": dedup.minhash_sig_table,
+        "scored_pairs": dedup.scored_pair_table,
+        "bk_sketches": dedup._bk_sketch_table,
         # The bk tier's scored output: once the kernel artifacts exist,
         # the tier's remaining cost is its inverted-index + scoring
         # joins — this table is that cost, paid once at ingest (measured
         # at sf1: ~20 s rebuilt vs sub-second from the store).
-        "bk_pairs": (dedup.bk_pair_table, dedup._BK_PAIR_CACHE),
+        "bk_pairs": dedup.bk_pair_table,
     }
 
 
@@ -136,7 +136,7 @@ def persist_dedup_artifacts(
     os.makedirs(out_dir, exist_ok=True)
     with _writer_guard(out_dir, _MANIFEST):
         counts = {}
-        for name, (builder, _cache) in _artifact_specs().items():
+        for name, builder in _artifact_specs().items():
             df = builder(spark, sf_dir)
             path = os.path.join(out_dir, name)
             df.write.mode("overwrite").parquet(path)
@@ -151,7 +151,7 @@ def persist_dedup_artifacts(
 
 
 def load_dedup_artifacts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """Seed the session artifact caches from a persisted store. The
+    """Seed the session memo from a persisted store. The
     manifest's corpus fingerprint must match ``sf_dir``'s documents table
     NOW — loading a store built against a regenerated corpus is an
     explicit error, never silently-stale results. Returns
@@ -166,9 +166,9 @@ def load_dedup_artifacts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
             f"documents table than {sf_dir} (fingerprint mismatch); "
             f"re-run persist_dedup_artifacts"
         )
-    key = session_cache_key(spark, sf_dir, "documents")
-    for name, (_builder, cache) in _artifact_specs().items():
-        cache[key] = spark.read.parquet(os.path.join(out_dir, name))
+    for name, builder in _artifact_specs().items():
+        df = spark.read.parquet(os.path.join(out_dir, name))
+        seed_artifact(builder, spark, sf_dir, df)
     return dict(manifest["rows"])
 
 
@@ -231,7 +231,7 @@ def persist_ingest_indexes(
 
 
 def load_ingest_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """Seed the four ingest lanes' index caches from a persisted store
+    """Seed the four ingest lanes' indexes from a persisted store
     (fingerprint-validated, like load_dedup_artifacts). The prefix
     lane's text lookup is reconstructed as the same lazy corpus-store
     projection the builder uses (one shared definition,
@@ -256,21 +256,29 @@ def load_ingest_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     def rd(name):
         return spark.read.parquet(os.path.join(out_dir, name))
 
-    dkey = session_cache_key(spark, sf_dir, "documents")
-    dedup._INC_INDEX_CACHE[dkey] = (
-        rd("minhash_bands"),
-        rd("minhash_sigs"),
-        rd("minhash_sizes"),
+    seed_artifact(
+        dedup.incremental_corpus_index,
+        spark,
+        sf_dir,
+        (rd("minhash_bands"), rd("minhash_sigs"), rd("minhash_sizes")),
     )
     lookup = dedup._prefix_corpus_frame(spark, sf_dir).select(
         F.col("doc_id").alias("corpus_id"), F.col("text").alias("corpus_text")
     )
-    dedup._PREFIX_INDEX_CACHE[dkey] = (rd("prefix_head_idx"), lookup)
-    dedup._BK_INDEX_CACHE[dkey] = (rd("bk_value_idx"), rd("bk_corpus_sk"))
+    seed_artifact(
+        dedup.prefix_corpus_index, spark, sf_dir, (rd("prefix_head_idx"), lookup)
+    )
+    seed_artifact(
+        dedup.bk_corpus_index,
+        spark,
+        sf_dir,
+        (rd("bk_value_idx"), rd("bk_corpus_sk")),
+    )
     cent = manifest["sem_centroids"]
     cent = None if cent is None else np.array(cent, dtype=np.int64)
-    ekey = session_cache_key(spark, sf_dir, "embeddings")
-    similarity._SEM_INDEX_CACHE[ekey] = (rd("sem_index"), cent)
+    seed_artifact(
+        similarity.semdedup_corpus_index, spark, sf_dir, (rd("sem_index"), cent)
+    )
     return dict(manifest["rows"])
 
 
@@ -834,10 +842,10 @@ def ann_store_health(spark: SparkSession, out_dir: str) -> list[dict]:
 
 
 def load_ann_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
-    """Seed the similarity tiers' serving caches from a persisted ANN
+    """Seed the similarity tiers' serving indexes from a persisted ANN
     store (fingerprint-validated against ``sf_dir``'s embeddings table
     NOW, like every other loader — a store built against a regenerated
-    corpus is an explicit error). Each cache gets the store's lazy
+    corpus is an explicit error). Each memo entry gets the store's lazy
     parquet scan, so every registered tier — and every query composed on
     one — transparently serves from disk: norms, LSH codes, IVF
     assignments, PQ codes, and MaxSim tokens all skip their build
@@ -913,58 +921,40 @@ def load_ann_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                 f"re-run persist_ann_indexes"
             )
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    similarity._VEC_NORMS_CACHE[key] = rd("vec_norms")
+    def seed(builder, value):
+        seed_artifact(builder, spark, sf_dir, value)
+
+    def mat(x):
+        return np.array(x, dtype=np.int64)
+
+    seed(similarity.vec_norm_table, rd("vec_norms"))
     rows = dict(manifest["rows"])
-    similarity._LSH_CODES_CACHE[key] = (
-        rd("lsh_codes") if "lsh_codes" in rows else None
-    )
+    seed(similarity.lsh_code_table, rd("lsh_codes") if "lsh_codes" in rows else None)
     cq = manifest["ivf_centroids"]
-    similarity._IVF_INDEX_CACHE[key] = (
-        None
-        if cq is None
-        else (rd("ivf_assigned"), np.array(cq, dtype=np.int64))
-    )
+    seed(similarity.ivf_index, None if cq is None else (rd("ivf_assigned"), mat(cq)))
     cbook = manifest["pq_codebook"]
-    similarity._PQ_INDEX_CACHE[key] = (
-        None
-        if cbook is None
-        else (rd("pq_codes"), np.array(cbook, dtype=np.int64))
-    )
+    seed(similarity.pq_index, None if cbook is None else (rd("pq_codes"), mat(cbook)))
     # Stores written before the HQ operating point existed (r12) lack the
-    # hq table; loading one leaves the hq cache unseeded so the tier
+    # hq table; loading one leaves the hq index unseeded so the tier
     # falls back to its build path rather than erroring.
     hq_cbook = manifest.get("pq_hq_codebook")
     if hq_cbook is not None and "pq_hq_codes" in rows:
-        similarity._PQ_HQ_INDEX_CACHE[key] = (
-            rd("pq_hq_codes"),
-            np.array(hq_cbook, dtype=np.int64),
-        )
+        seed(similarity.pq_hq_index, (rd("pq_hq_codes"), mat(hq_cbook)))
     # Stores written before the corpus-scaled point (r14) lack this
-    # table; loading one leaves the scaled cache unseeded so the tier
+    # table; loading one leaves the scaled index unseeded so the tier
     # falls back to its build path (the pq_hq precedent).
     s_cq = manifest.get("ivf_scaled_centroids")
     if s_cq is not None and "ivf_scaled_assigned" in rows:
-        similarity._IVF_SCALED_INDEX_CACHE[key] = (
-            rd("ivf_scaled_assigned"),
-            np.array(s_cq, dtype=np.int64),
-        )
+        seed(similarity.ivf_scaled_index, (rd("ivf_scaled_assigned"), mat(s_cq)))
     # Stores written before round 15 lack the trained-router and
-    # residual tables; loading one leaves those caches unseeded so the
+    # residual tables; loading one leaves those indexes unseeded so the
     # tiers fall back to their build paths (the pq_hq precedent).
     t_cq = manifest.get("ivf_trained_centroids")
     if t_cq is not None and "ivf_trained_assigned" in rows:
-        similarity._IVF_TRAINED_INDEX_CACHE[key] = (
-            rd("ivf_trained_assigned"),
-            np.array(t_cq, dtype=np.int64),
-        )
+        seed(similarity.ivf_trained_index, (rd("ivf_trained_assigned"), mat(t_cq)))
     r_cbook = manifest.get("pq_res_codebook")
     r_cpq = manifest.get("pq_res_cpq")
     if r_cbook is not None and r_cpq is not None and "pq_res_codes" in rows:
-        similarity._PQ_RES_INDEX_CACHE[key] = (
-            rd("pq_res_codes"),
-            np.array(r_cbook, dtype=np.int64),
-            np.array(r_cpq, dtype=np.int64),
-        )
-    similarity._MS_TOKENS_CACHE[key] = rd("maxsim_tokens")
+        seed(similarity.pq_res_index, (rd("pq_res_codes"), mat(r_cbook), mat(r_cpq)))
+    seed(similarity.maxsim_token_table, rd("maxsim_tokens"))
     return rows

@@ -77,7 +77,14 @@ from mapreduce_framework_api_spark.operators.dedup import (
     capped_bucket,
 )
 from mapreduce_framework_api_spark.registry import register
-from mapreduce_framework_api_spark.sources import parallelized, session_cache_key, table
+from mapreduce_framework_api_spark.sources import (
+    memoize,
+    parallelized,
+    peek_artifact,
+    session_artifact,
+    session_cache_key,
+    table,
+)
 
 _TOP_K = 5
 
@@ -89,16 +96,13 @@ _TOP_K = 5
 _INDEX_BLOCK_ROWS = int(os.environ.get("SPARK_GRAFT_INDEX_BLOCK_ROWS", "1024"))
 
 
-# Session cache for the normed-vector serving table (the brute-force
-# tier's "index": the corpus vectors + precomputed norms, exactly what a
-# production vector store keeps next to the embeddings). Keyed like every
-# artifact cache (fingerprinted session key); persistable via
-# operators/artifacts.py::persist_ann_indexes — loading seeds this dict
-# with the store's parquet scan, so every consumer (the brute block grid,
-# the LSH scoring joins) transparently serves from disk.
-_VEC_NORMS_CACHE: dict[tuple, DataFrame] = {}
-
-
+# The normed-vector serving table (the brute-force tier's "index": the
+# corpus vectors + precomputed norms, exactly what a production vector
+# store keeps next to the embeddings) is a session artifact, persistable
+# via operators/artifacts.py::persist_ann_indexes — a store load seeds the
+# session memo with the store's parquet scan, so every consumer (the
+# brute block grid, the LSH scoring joins) transparently serves from disk.
+@session_artifact("embeddings")
 def vec_norm_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, embedding float-array, nrm double): the corpus vectors
     with precomputed double-precision norms — the exact-search serving
@@ -112,16 +116,11 @@ def vec_norm_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     directly on this scan, so a single-row-group parquet file (the sf1
     receipt fixture: one 2.9 s single-task stage) must be widened before
     the per-row work; a real multi-split scan passes through untouched."""
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    got = _VEC_NORMS_CACHE.get(key)
-    if got is None:
-        e = parallelized(table(spark, sf_dir, "embeddings")).select(
-            "vec_id", "embedding"
-        )
-        v = F.transform("embedding", lambda x: x.cast("double"))
-        got = e.select("vec_id", "embedding", F.sqrt(_dot(v, v)).alias("nrm"))
-        _VEC_NORMS_CACHE[key] = got
-    return got
+    e = parallelized(table(spark, sf_dir, "embeddings")).select(
+        "vec_id", "embedding"
+    )
+    v = F.transform("embedding", lambda x: x.cast("double"))
+    return e.select("vec_id", "embedding", F.sqrt(_dot(v, v)).alias("nrm"))
 
 
 def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -243,17 +242,20 @@ def _topk_rerank(
 # materialization (see q_sim_ivf_recall's note: ReusedExchange already
 # dedupes subtrees inside one plan), this CROSS-query cache pays one
 # small checkpoint to delete whole recomputed pipelines in the sibling
-# queries. Keyed like the dedup pair caches (fingerprinted session key).
-_TIER_OUT_CACHE: dict[tuple[str, str, str], DataFrame] = {}
+# queries. The entries live in the session memo under _TIER_OUT plus the
+# tier tag, which carries any operating point (``@p{nprobe}``,
+# ``@d{depth}``) so one point never reads another's output.
+_TIER_OUT = f"{__name__}._tier_cached"
+
+
+def _tier_key(tag: str, spark: SparkSession, sf_dir: str) -> tuple:
+    return (_TIER_OUT, session_cache_key(spark, sf_dir, "embeddings"), (tag,))
 
 
 def _tier_cached(tag: str, spark: SparkSession, sf_dir: str, build) -> DataFrame:
-    key = (*session_cache_key(spark, sf_dir, "embeddings"), tag)
-    got = _TIER_OUT_CACHE.get(key)
-    if got is None:
-        got = build().localCheckpoint()
-        _TIER_OUT_CACHE[key] = got
-    return got
+    return memoize(
+        _tier_key(tag, spark, sf_dir), lambda: build().localCheckpoint()
+    )
 
 
 def _rowwise_topk(s, ids, k, q_ids=None):
@@ -600,32 +602,22 @@ def _lsh_geometry(spark: SparkSession, sf_dir: str) -> tuple[int, int] | None:
     return _lsh_g_for(n), int(probe["d"])
 
 
-# Session cache for the LSH serving index: the per-(table, code) hash
-# codes of every corpus vector. None = empty corpus (no geometry).
-_LSH_CODES_CACHE: dict[tuple, DataFrame | None] = {}
-
-
+@session_artifact("embeddings")
 def lsh_code_table(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     """(vec_id, table_id, code): every vector's code in each of the
     _LSH_TABLES hash tables — the sign-LSH serving index a production
     deployment persists at ingest (the geometry (g, d) is derived from
     corpus metadata and travels in the store manifest). Returns None on
     an empty corpus. Lazy on the build path; a loaded ANN store seeds
-    the cache with its parquet scan, so bucketing runs off disk codes
-    with zero kernel work."""
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _LSH_CODES_CACHE:
-        return _LSH_CODES_CACHE[key]
+    the session memo with its parquet scan, so bucketing runs off disk
+    codes with zero kernel work."""
     geom = _lsh_geometry(spark, sf_dir)
     if geom is None:
-        _LSH_CODES_CACHE[key] = None
         return None
     g, d = geom
-    codes = _vectors(spark, sf_dir).select(
+    return _vectors(spark, sf_dir).select(
         "vec_id", F.posexplode(_lsh_codes_udf(g, d)("v")).alias("table_id", "code")
     )
-    _LSH_CODES_CACHE[key] = codes
-    return codes
 
 
 @F.pandas_udf(DoubleType())  # DataType instance: a DDL string here would
@@ -874,7 +866,7 @@ def _md5_topk_seed(df, k: int, salt: str | None = None):
     )
 
 
-# Session cache for FULL-CORPUS seed pulls (r16): ivf_index,
+# Session memo for FULL-CORPUS seed pulls (r16): ivf_index,
 # pq_res_index, and the scaled/trained routers each pulled their
 # md5-top-K seed with an independent TakeOrdered driver job, and
 # pq_res_index's two pulls duplicate ivf_index's and pq_hq_index's
@@ -884,17 +876,10 @@ def _md5_topk_seed(df, k: int, salt: str | None = None):
 # the duplicate driver jobs (guide §1.2: don't compute things twice).
 # Split-filtered seed universes (frozen-base 7/8, semsplit) pass a
 # different frame and stay uncached.
-_SEED_PDF_CACHE: dict[tuple, object] = {}
-
-
+@session_artifact("embeddings")
 def _corpus_seed(spark: SparkSession, sf_dir: str, k: int, salt: str | None = None):
-    key = (*session_cache_key(spark, sf_dir, "embeddings"), k, salt)
-    got = _SEED_PDF_CACHE.get(key)
-    if got is None:
-        e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-        got = _md5_topk_seed(e, k, salt)
-        _SEED_PDF_CACHE[key] = got
-    return got
+    e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    return _md5_topk_seed(e, k, salt)
 
 
 def _env_int_knob(name: str, default: int, hi: int) -> int:
@@ -935,13 +920,7 @@ def _ivf_nprobe() -> int:
     return _env_int_knob("SPARK_GRAFT_IVF_NPROBE", _IVF_NPROBE, _IVF_K)
 
 
-# Session cache for the IVF serving index: (assigned frame, int64
-# centroid matrix). None = empty corpus. The assigned frame carries the
-# FULL per-vector probe ranking (K small ints), so any nprobe <= K is a
-# query-time slice over one stored index.
-_IVF_INDEX_CACHE: dict[tuple, tuple | None] = {}
-
-
+@session_artifact("embeddings")
 def ivf_index(spark: SparkSession, sf_dir: str):
     """Build (or serve from cache/store) the IVF serving index:
     ``(assigned, cq)`` where ``assigned`` is (vec_id, embedding,
@@ -955,18 +934,16 @@ def ivf_index(spark: SparkSession, sf_dir: str):
     real-world shape — IVF list assignment is the persisted index-build
     step, scored queries stream against it
     (operators/artifacts.py::persist_ann_indexes writes exactly this
-    frame; loading seeds this cache with the store's parquet scan)."""
+    frame; loading seeds the session memo with the store's parquet
+    scan). The assigned frame carries the FULL per-vector probe ranking
+    (K small ints), so any nprobe <= K is a query-time slice over one
+    stored index."""
     import numpy as np
     import pandas as pd
-
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _IVF_INDEX_CACHE:
-        return _IVF_INDEX_CACHE[key]
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = _corpus_seed(spark, sf_dir, _IVF_K)
     if seed.empty:
-        _IVF_INDEX_CACHE[key] = None
         return None
     cq = np.floor(
         np.stack(seed["embedding"].to_numpy()).astype(np.float64) * _IVF_SCALE
@@ -994,7 +971,6 @@ def ivf_index(spark: SparkSession, sf_dir: str):
         assign,
         schema="vec_id long, embedding array<float>, cluster int, probes array<int>",
     ).localCheckpoint()
-    _IVF_INDEX_CACHE[key] = (assigned, cq)
     return assigned, cq
 
 
@@ -1051,8 +1027,7 @@ def q_sim_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The tag carries the active nprobe so an operating-point sweep never
     # reads another point's cached output.
     tier_tag = f"ivf_topk@p{_ivf_nprobe()}"
-    cache_key = (*session_cache_key(spark, sf_dir, "embeddings"), tier_tag)
-    cached = _TIER_OUT_CACHE.get(cache_key)
+    cached = peek_artifact(_tier_key(tier_tag, spark, sf_dir))
     if cached is not None:
         return cached
 
@@ -1249,19 +1224,13 @@ ORDER BY query_id, rk
 """  # shared with q_sim_pq_recall's composed oracle
 
 
-# Session caches for the PQ serving indexes: (code table, codebook
-# tensor). None = empty corpus (no codebook to train). One cache per
-# operating point — the default (M=4, K=16, 64× compression) and the
-# high-quality point (M=32, K=256, 8× compression) are independent
-# persisted artifacts.
-_PQ_INDEX_CACHE: dict[tuple, tuple | None] = {}
-_PQ_HQ_INDEX_CACHE: dict[tuple, tuple | None] = {}
-
-
+# The PQ serving indexes — (code table, codebook tensor), None on an
+# empty corpus — are one session artifact per operating point: the
+# default (M=4, K=16, 64× compression) and the high-quality point (M=32,
+# K=256, 8× compression) are independent persisted artifacts.
 def _pq_index_build(
     spark: SparkSession,
     sf_dir: str,
-    cache: dict,
     seed_tag: str,
     M: int,
     SUB: int,
@@ -1279,20 +1248,15 @@ def _pq_index_build(
     full probe ranking: the persisted store must serve any downstream
     query split, not bake one in. Lazy (no checkpoint): it feeds only
     the index side of the search grid. A loaded ANN store
-    (operators/artifacts.py::load_ann_indexes) seeds the cache with the
-    store's parquet scan plus the manifest codebook, so scoring runs off
-    disk codes with zero encode work."""
+    (operators/artifacts.py::load_ann_indexes) seeds the session memo
+    with the store's parquet scan plus the manifest codebook, so scoring
+    runs off disk codes with zero encode work."""
     import numpy as np
     import pandas as pd
-
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in cache:
-        return cache[key]
 
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = _corpus_seed(spark, sf_dir, K, seed_tag)
     if seed.empty:
-        cache[key] = None
         return None
     # a corpus smaller than K trains a smaller codebook (the oracle's
     # LIMIT does the same), so the reshape uses the actual seed count
@@ -1327,16 +1291,14 @@ def _pq_index_build(
     # single-row-group fixture scan must be widened before it (the
     # vec_norm_table rationale).
     codes = parallelized(e).mapInPandas(encode, schema="vec_id long, codes array<int>")
-    cache[key] = (codes, cbook)
     return codes, cbook
 
 
+@session_artifact("embeddings")
 def pq_index(spark: SparkSession, sf_dir: str):
     """The default PQ serving index: _PQ_M=4 subspaces × 16 dims, 16-entry
     codebooks — 4 B/vector, the 64×-compression end of the curve."""
-    return _pq_index_build(
-        spark, sf_dir, _PQ_INDEX_CACHE, "pq#", _PQ_M, _PQ_SUB, _PQ_K
-    )
+    return _pq_index_build(spark, sf_dir, "pq#", _PQ_M, _PQ_SUB, _PQ_K)
 
 
 @register(
@@ -1376,8 +1338,7 @@ def q_sim_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # Cache probe before the eager driver-side codebook fetch (see the
     # matching note in q_sim_ivf_topk).
-    cache_key = (*session_cache_key(spark, sf_dir, "embeddings"), "pq_topk")
-    cached = _TIER_OUT_CACHE.get(cache_key)
+    cached = peek_artifact(_tier_key("pq_topk", spark, sf_dir))
     if cached is not None:
         return cached
 
@@ -1446,11 +1407,7 @@ _MS_SCALE = 1000
 _MS_TOP_K = 3
 
 
-# Session cache for the MaxSim serving table: the integer-quantized token
-# layout of every vector.
-_MS_TOKENS_CACHE: dict[tuple, DataFrame] = {}
-
-
+@session_artifact("embeddings")
 def maxsim_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, itok array<long>): every vector's integer-quantized token
     layout — floor(x * _MS_SCALE) per coordinate, read downstream as
@@ -1458,21 +1415,16 @@ def maxsim_token_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM expression work (one higher-order transform per row, no Python),
     lazy and column-prunable, split-agnostic like the PQ code table. A
     loaded ANN store (operators/artifacts.py::load_ann_indexes) seeds
-    this cache with the store's parquet scan, so the scoring kernel
-    consumes pre-quantized int64 tokens straight off disk instead of
-    re-flooring the float corpus per query."""
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    got = _MS_TOKENS_CACHE.get(key)
-    if got is None:
-        got = table(spark, sf_dir, "embeddings").select(
-            "vec_id",
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x.cast("double") * _MS_SCALE).cast("long"),
-            ).alias("itok"),
-        )
-        _MS_TOKENS_CACHE[key] = got
-    return got
+    the session memo with the store's parquet scan, so the scoring
+    kernel consumes pre-quantized int64 tokens straight off disk instead
+    of re-flooring the float corpus per query."""
+    return table(spark, sf_dir, "embeddings").select(
+        "vec_id",
+        F.transform(
+            "embedding",
+            lambda x: F.floor(x.cast("double") * _MS_SCALE).cast("long"),
+        ).alias("itok"),
+    )
 
 
 @register(
@@ -1850,8 +1802,7 @@ def _ivfpq_search(
     # a tag with top_k deeper than the cached build must MISS and build
     # its own tier rather than silently read a truncated ranking.
     tier_tag = f"{tier_tag}@d{depth}"
-    cache_key = (*session_cache_key(spark, sf_dir, "embeddings"), tier_tag)
-    cached = _TIER_OUT_CACHE.get(cache_key)
+    cached = peek_artifact(_tier_key(tier_tag, spark, sf_dir))
     if cached is not None:
         return _cut(cached)
 
@@ -2410,14 +2361,13 @@ ORDER BY vec_id, rk
 """  # shared with q_sim_ivfpq_hq_recall's composed oracle
 
 
+@session_artifact("embeddings")
 def pq_hq_index(spark: SparkSession, sf_dir: str):
     """The high-quality PQ serving index: _HQ_M=32 subspaces × 2 dims,
     256-entry codebooks — 32 B/vector, the 8×-compression /
     deployable-recall point on the curve. Persisted alongside the
     default index by operators/artifacts.py::persist_ann_indexes."""
-    return _pq_index_build(
-        spark, sf_dir, _PQ_HQ_INDEX_CACHE, "pqhq#", _HQ_M, _HQ_SUB, _HQ_K
-    )
+    return _pq_index_build(spark, sf_dir, "pqhq#", _HQ_M, _HQ_SUB, _HQ_K)
 
 
 @register(
@@ -2667,9 +2617,7 @@ def q_sim_ivfpq_hq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # probed list — constant work, since candidates in a cogroup block share
 # their list). Same router, nprobe, codebook budget, and bytes/vector as
 # the HQ point — the recall delta is purely what residual encoding buys.
-_PQ_RES_INDEX_CACHE: dict[tuple, tuple | None] = {}
-
-
+@session_artifact("embeddings")
 def pq_res_index(spark: SparkSession, sf_dir: str):
     """The residual-PQ serving index: ``(codes, cbook, cpq)`` where
     ``codes`` is the full-corpus residual code table (vec_id, codes
@@ -2682,13 +2630,8 @@ def pq_res_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _PQ_RES_INDEX_CACHE:
-        return _PQ_RES_INDEX_CACHE[key]
-
     idx = ivf_index(spark, sf_dir)
     if idx is None:
-        _PQ_RES_INDEX_CACHE[key] = None
         return None
     assigned, cq_ivf = idx
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -2789,7 +2732,6 @@ def pq_res_index(spark: SparkSession, sf_dir: str):
     codes = ivfpq_append_check(e, cq_ivf, cbook, res_cpq=cpq).select(
         "vec_id", "codes"
     )
-    _PQ_RES_INDEX_CACHE[key] = (codes, cbook, cpq)
     return codes, cbook, cpq
 
 
@@ -2891,9 +2833,7 @@ def _ivf_scaled_nprobe(k: int) -> int:
     )
 
 
-_IVF_SCALED_INDEX_CACHE: dict[tuple, tuple | None] = {}
-
-
+@session_artifact("embeddings")
 def ivf_scaled_index(spark: SparkSession, sf_dir: str):
     """The corpus-scaled coarse quantizer's serving index: ``(assigned,
     cq)`` like ivf_index, with K = _ivf_scaled_k(N) salted md5 seeds
@@ -2907,15 +2847,10 @@ def ivf_scaled_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _IVF_SCALED_INDEX_CACHE:
-        return _IVF_SCALED_INDEX_CACHE[key]
-
     k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = _corpus_seed(spark, sf_dir, k, _IVF_SCALED_SALT)
     if seed.empty:
-        _IVF_SCALED_INDEX_CACHE[key] = None
         return None
     cq = np.floor(
         np.stack(seed["embedding"].to_numpy()).astype(np.float64) * _IVF_SCALE
@@ -2929,7 +2864,6 @@ def ivf_scaled_index(spark: SparkSession, sf_dir: str):
         .select("vec_id", "embedding", "cluster", "probes")
         .localCheckpoint()
     )
-    _IVF_SCALED_INDEX_CACHE[key] = (assigned, cq)
     return assigned, cq
 
 
@@ -3323,9 +3257,7 @@ def _lloyd_refine(spark: SparkSession, e: DataFrame, cq0, iters: int):
     return cq
 
 
-_IVF_TRAINED_INDEX_CACHE: dict[tuple, tuple | None] = {}
-
-
+@session_artifact("embeddings")
 def ivf_trained_index(spark: SparkSession, sf_dir: str):
     """The TRAINED corpus-scaled quantizer's serving index: identical
     geometry to ivf_scaled_index (K = _ivf_scaled_k(N) lists, probe
@@ -3337,15 +3269,10 @@ def ivf_trained_index(spark: SparkSession, sf_dir: str):
     import numpy as np
     import pandas as pd
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _IVF_TRAINED_INDEX_CACHE:
-        return _IVF_TRAINED_INDEX_CACHE[key]
-
     k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
     e = table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     seed = _corpus_seed(spark, sf_dir, k, _IVF_TRAINED_SALT)
     if seed.empty:
-        _IVF_TRAINED_INDEX_CACHE[key] = None
         return None
     cq0 = np.floor(
         np.stack(seed["embedding"].to_numpy()).astype(np.float64) * _IVF_SCALE
@@ -3360,7 +3287,6 @@ def ivf_trained_index(spark: SparkSession, sf_dir: str):
         .select("vec_id", "embedding", "cluster", "probes")
         .localCheckpoint()
     )
-    _IVF_TRAINED_INDEX_CACHE[key] = (assigned, cq)
     return assigned, cq
 
 
@@ -4071,12 +3997,7 @@ def ivfpq_append_check(
     )
 
 
-_APPEND_BASE_CACHE: dict[tuple, tuple | None] = {}
-
-
-_APPEND_STATE_CACHE: dict[tuple, tuple | None] = {}
-
-
+@session_artifact("embeddings")
 def frozen_base_state(spark: SparkSession, sf_dir: str):
     """Just the frozen DERIVED state of the append lane — ``(cq,
     cbook)`` seeded from the 7/8 base split (salted 'ivfb#'/'pqhqb#').
@@ -4087,9 +4008,6 @@ def frozen_base_state(spark: SparkSession, sf_dir: str):
     cost ∝ K, never corpus."""
     import numpy as np
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _APPEND_STATE_CACHE:
-        return _APPEND_STATE_CACHE[key]
     base = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -4104,7 +4022,6 @@ def frozen_base_state(spark: SparkSession, sf_dir: str):
 
     s = _seed(_APPEND_SEED_SALT, _IVF_K)
     if s is None:
-        _APPEND_STATE_CACHE[key] = None
         return None
     cq = np.floor(s * _IVF_SCALE).astype(np.int64)
     hs = _seed(_APPEND_HQ_SALT, _HQ_K)
@@ -4114,10 +4031,10 @@ def frozen_base_state(spark: SparkSession, sf_dir: str):
         .reshape(len(hs), _HQ_M, _HQ_SUB)
         .transpose(1, 0, 2)
     )
-    _APPEND_STATE_CACHE[key] = (cq, cbook)
     return cq, cbook
 
 
+@session_artifact("embeddings")
 def ivfpq_frozen_base_index(spark: SparkSession, sf_dir: str):
     """The append lane's frozen serving state over the 7/8 base split —
     ``(base_assigned, cq, cbook)`` where ``base_assigned`` is the base
@@ -4128,12 +4045,8 @@ def ivfpq_frozen_base_index(spark: SparkSession, sf_dir: str):
     semdedup_corpus_index recipe: a localCheckpoint standing in for the
     persisted store); the bulk build itself runs through
     ivfpq_append_check, so base and appended rows share one kernel."""
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _APPEND_BASE_CACHE:
-        return _APPEND_BASE_CACHE[key]
     state = frozen_base_state(spark, sf_dir)
     if state is None:
-        _APPEND_BASE_CACHE[key] = None
         return None
     cq, cbook = state
     base = (
@@ -4146,7 +4059,6 @@ def ivfpq_frozen_base_index(spark: SparkSession, sf_dir: str):
         .select("vec_id", "cluster")
         .localCheckpoint()
     )
-    _APPEND_BASE_CACHE[key] = (base_assigned, cq, cbook)
     return base_assigned, cq, cbook
 
 
@@ -4649,9 +4561,9 @@ def ivfpq_drift_check(new_vecs: DataFrame, cq) -> DataFrame:
 
 
 _SCALED_BASE_SALT = "ivfsb#"  # frozen-base CORPUS-SCALED quantizer universe
-_SCALED_STATE_CACHE: dict[tuple, object] = {}
 
 
+@session_artifact("embeddings")
 def scaled_frozen_base_state(spark: SparkSession, sf_dir: str):
     """Frozen-base variant of the CORPUS-SCALED coarse quantizer for the
     maintenance lanes: K = _ivf_scaled_k(n_base) md5-salted seeds drawn
@@ -4663,9 +4575,6 @@ def scaled_frozen_base_state(spark: SparkSession, sf_dir: str):
     maintenance instruments as the fixed-K one."""
     import numpy as np
 
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    if key in _SCALED_STATE_CACHE:
-        return _SCALED_STATE_CACHE[key]
     base = (
         table(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
@@ -4674,13 +4583,10 @@ def scaled_frozen_base_state(spark: SparkSession, sf_dir: str):
     k = _ivf_scaled_k(base.count())
     pdf = _md5_topk_seed(base, k, _SCALED_BASE_SALT)
     if pdf.empty:
-        _SCALED_STATE_CACHE[key] = None
         return None
-    cq = np.floor(
+    return np.floor(
         np.stack(pdf["embedding"].to_numpy()).astype(np.float64) * _IVF_SCALE
     ).astype(np.int64)
-    _SCALED_STATE_CACHE[key] = cq
-    return cq
 
 
 @register(
@@ -5222,8 +5128,7 @@ def exact_topk_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         # bit-identical and free; otherwise build the bounded
         # |sample| x corpus grid — the standalone/production path, the
         # one the sf1 receipts measure.
-        full_key = (*session_cache_key(spark, sf_dir, "embeddings"), "cosine_topk")
-        full = _TIER_OUT_CACHE.get(full_key)
+        full = peek_artifact(_tier_key("cosine_topk", spark, sf_dir))
         if full is not None:
             return full.filter(_recall_sample()).select(
                 "vec_id", "neighbor_id", "rk"
@@ -6022,9 +5927,7 @@ def _sem_assign(df: DataFrame, cent_np) -> DataFrame:
     )
 
 
-_SEM_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
+@session_artifact("embeddings")
 def semdedup_corpus_index(spark: SparkSession, sf_dir: str):
     """The persisted SemDeDup ingest index for the frozen 7/8 corpus:
     (index DataFrame (corpus_id, cluster, vc array<double>, nc norm),
@@ -6034,16 +5937,11 @@ def semdedup_corpus_index(spark: SparkSession, sf_dir: str):
     micro-batch. The index carries the double-cast vector and its
     precomputed norm: exactly the fields a production vector store
     persists next to the cluster id."""
-    key = session_cache_key(spark, sf_dir, "embeddings")
-    cached = _SEM_INDEX_CACHE.get(key)
-    if cached is not None:
-        return cached
     cent = _corpus_seed_centroids(spark, sf_dir)
     if cent is None:
         empty = spark.createDataFrame(
             [], "corpus_id long, cluster long, vc array<double>, nc double"
         )
-        _SEM_INDEX_CACHE[key] = (empty, None)
         return empty, None
     corpus = (
         table(spark, sf_dir, "embeddings")
@@ -6061,7 +5959,6 @@ def semdedup_corpus_index(spark: SparkSession, sf_dir: str):
         .select("corpus_id", "cluster", "vc", F.sqrt(_dot(F.col("vc"), F.col("vc"))).alias("nc"))
         .localCheckpoint()
     )
-    _SEM_INDEX_CACHE[key] = (index, cent)
     return index, cent
 
 

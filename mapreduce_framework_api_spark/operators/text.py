@@ -33,7 +33,7 @@ from mapreduce_framework_api_spark.functions.textfns import (
     tokens_nonempty,
 )
 from mapreduce_framework_api_spark.registry import register
-from mapreduce_framework_api_spark.sources import parallelized, session_cache_key, table
+from mapreduce_framework_api_spark.sources import parallelized, session_artifact, table
 
 # DuckDB-side equivalent of tokens_nonempty(text).
 _ORACLE_TOKS = "list_filter(regexp_split_to_array(text, '[^A-Za-z0-9]+'), t -> t <> '')"
@@ -62,9 +62,7 @@ def q_text_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_wordcount(spark, sf_dir).orderBy("token")
 
 
-_WORDCOUNT_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@session_artifact("documents")
 def corpus_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The corpus token-frequency table (token, cnt) — the wordcount
     exchange that FOUR declared queries start from (wordcount itself,
@@ -74,19 +72,13 @@ def corpus_wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of rows), and cached: the dedup-family pair-table
     discipline applied to the text family's shared scan+explode+agg
     prefix."""
-    key = session_cache_key(spark, sf_dir, "documents")
-    cached = _WORDCOUNT_CACHE.get(key)
-    if cached is not None:
-        return cached
     docs_wc = parallelized(table(spark, sf_dir, "documents"))
-    out = (
+    return (
         docs_wc.select(explode_tokens("text"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
         .localCheckpoint()
     )
-    _WORDCOUNT_CACHE[key] = out
-    return out
 
 
 @register(
@@ -802,9 +794,7 @@ def q_text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("step")
 
 
-_BPE_RUN_CACHE: dict[tuple[str, str], tuple[DataFrame, list[DataFrame]]] = {}
-
-
+@session_artifact("documents")
 def _bpe_run(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFrame]]:
     """The shared BPE trainer pipeline (see q_text_bpe_merges for the full
     semantics/scale discussion): returns (vocabulary after all merge
@@ -817,13 +807,8 @@ def _bpe_run(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFram
     carries a fixture fingerprint (mtime_ns + size of the documents
     parquet), not just the path — a fixture regenerated in place within
     one Spark application must retrain, not serve stale trainer output.
-    (The fingerprint key now comes from the shared session_cache_key
-    helper, which generalized this fix to every session cache.)"""
-    key = session_cache_key(spark, sf_dir, "documents")
-    cached = _BPE_RUN_CACHE.get(key)
-    if cached is not None:
-        return cached
-
+    (The fingerprint key now comes from the shared session memo,
+    which generalized this fix to every session artifact.)"""
     from mapreduce_framework_api_spark.functions.textfns import explode_tokens
 
     tok = table(spark, sf_dir, "documents").select(explode_tokens("text"))
@@ -907,7 +892,6 @@ def _bpe_run(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, list[DataFram
             F.replace(F.col("sym"), F.lit(search), F.lit(merged)).alias("sym"),
             "freq",
         )
-    _BPE_RUN_CACHE[key] = (words, merges)
     return words, merges
 
 

@@ -75,11 +75,9 @@ def get_spark(
 
 
 def clear_session_caches() -> None:
-    """Drop every per-(application, sf_dir, fingerprint) materialized-
-    artifact cache (the localCheckpoint'd shared tables: minhash
-    signatures/candidates, SimHash and Jaccard pairs, cluster labels,
-    the incremental and SemDeDup corpus indexes, corpus wordcount, BPE
-    trainer runs, graph adjacency, similarity tier outputs).
+    """Drop every session artifact (sources.readers' one memo: the
+    localCheckpoint'd shared tables, corpus and ANN indexes, tier
+    outputs, trainer runs, lazy scan handles).
 
     Callers: tests that need a query to genuinely RE-EXECUTE inside one
     application — e.g. the partitioning-invariance suite, which re-runs
@@ -88,46 +86,6 @@ def clear_session_caches() -> None:
     harness that changes runtime confs affecting physical plans.
     Checkpointed blocks are released by the JVM ContextCleaner once the
     dropped DataFrames are garbage-collected."""
-    from mapreduce_framework_api_spark.operators import (
-        dedup,
-        graph,
-        similarity,
-        text,
-    )
     from mapreduce_framework_api_spark.sources import readers
 
-    for d in (
-        readers._TABLE_HANDLE_CACHE,
-        dedup._MINHASH_SIG_CACHE,
-        dedup._MINHASH_CAND_CACHE,
-        dedup._SIMHASH_PAIR_CACHE,
-        dedup._JACCARD_PAIR_CACHE,
-        dedup._SCORED_PAIR_CACHE,
-        dedup._SHINGLE_TABLE_CACHE,
-        dedup._BK_SKETCH_CACHE,
-        dedup._BK_PAIR_CACHE,
-        dedup._BK_INDEX_CACHE,
-        dedup._CONT_EST_CACHE,
-        dedup._CLUSTER_LABEL_CACHE,
-        dedup._INC_INDEX_CACHE,
-        dedup._PREFIX_INDEX_CACHE,
-        text._WORDCOUNT_CACHE,
-        text._BPE_RUN_CACHE,
-        graph._ADJ_CACHE,
-        similarity._TIER_OUT_CACHE,
-        similarity._SEED_PDF_CACHE,
-        similarity._SEM_INDEX_CACHE,
-        similarity._VEC_NORMS_CACHE,
-        similarity._LSH_CODES_CACHE,
-        similarity._IVF_INDEX_CACHE,
-        similarity._IVF_SCALED_INDEX_CACHE,
-        similarity._IVF_TRAINED_INDEX_CACHE,
-        similarity._APPEND_BASE_CACHE,
-        similarity._APPEND_STATE_CACHE,
-        similarity._SCALED_STATE_CACHE,
-        similarity._PQ_INDEX_CACHE,
-        similarity._PQ_HQ_INDEX_CACHE,
-        similarity._PQ_RES_INDEX_CACHE,
-        similarity._MS_TOKENS_CACHE,
-    ):
-        d.clear()
+    readers._SESSION_ARTIFACTS.clear()

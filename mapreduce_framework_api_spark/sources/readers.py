@@ -17,6 +17,8 @@ refuses loudly outside it) and ICEBERG stays a guarded stub.
 
 from __future__ import annotations
 
+import functools
+import inspect
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -61,10 +63,9 @@ def fixture_fingerprint(sf_dir: str, name: str) -> tuple:
 
 
 def session_cache_key(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
-    """Key for per-session materialized-artifact caches (the
-    jaccard_dup_pairs / _copurchase_adj / corpus_wordcount discipline):
+    """The session part of every memo key (``session_artifact``):
     (applicationId, abspath(sf_dir), input-table fingerprints). One
-    definition so every cache gets the staleness guard."""
+    definition so every artifact gets the staleness guard."""
     return (
         spark.sparkContext.applicationId,
         os.path.abspath(sf_dir),
@@ -72,25 +73,75 @@ def session_cache_key(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
     )
 
 
-# Lazy scan-HANDLE cache (r15 optimization): ``spark.read.parquet`` costs
-# ~80 ms per call on this sandbox (driver-side file listing + footer
-# schema inference + py4j round trips), and the engine makes one to three
-# ``table()`` calls inside every timed query build — ~20 s of pure driver
-# latency across a 203-query board (guide §5: the driver should do almost
-# no data work, and §6: repeated listings are cacheable). The cached
-# object is an UNMATERIALIZED logical plan: every action still reads the
-# parquet files in full, physical planning (shuffle-partition count, AQE)
-# still happens per action, so this caches no result — only the schema
-# discovery. Keyed by (applicationId, path, fixture fingerprint) like
-# every session cache, so an in-place fixture regeneration re-infers.
-# Wired into clear_session_caches like every other session cache: a lazy
-# handle re-executes by construction so clearing costs only the ~80 ms
-# rebuild, and the repo invariant is that every *_CACHE dict is cleared.
-_TABLE_HANDLE_CACHE: dict[tuple, DataFrame] = {}
+# The ONE session memo: every artifact the engine shares across queries
+# inside a Spark application (checkpointed pair tables, corpus and ANN
+# indexes, tier outputs, trainer runs, lazy scan handles) lives here under
+# (builder name, session_cache_key, builder arguments). One dict means one
+# clear (session.clear_session_caches) and one seeding seam for the
+# artifact store (operators/artifacts.py). A stored None is an entry like
+# any other: an empty-corpus result is not rebuilt.
+_SESSION_ARTIFACTS: dict[tuple, object] = {}
+
+
+def memoize(key: tuple, build):
+    """The memo entry for ``key``; on a miss, ``build()`` runs and its
+    result is stored. The probe precedes any of the builder's work."""
+    if key in _SESSION_ARTIFACTS:
+        return _SESSION_ARTIFACTS[key]
+    out = _SESSION_ARTIFACTS[key] = build()
+    return out
+
+
+def peek_artifact(key: tuple):
+    """The memo entry for ``key``, or None when absent — never builds."""
+    return _SESSION_ARTIFACTS.get(key)
+
+
+def seed_artifact(builder, spark: SparkSession, sf_dir: str, value) -> None:
+    """Make ``builder(spark, sf_dir)`` return ``value`` for the rest of the
+    session (the artifact-store load path)."""
+    _SESSION_ARTIFACTS[builder.artifact_key(spark, sf_dir)] = value
+
+
+def session_artifact(*tables: str):
+    """Decorator memoizing ``build(spark, sf_dir, *args)`` per session,
+    keyed by the builder's qualified name, ``session_cache_key(spark,
+    sf_dir, *tables)`` — so a fixture regenerated in place rebuilds — and
+    the remaining arguments (defaults applied, so equal calls share an
+    entry). The wrapper's ``artifact_key`` computes the key without
+    building. The builder decides its own materialization
+    (localCheckpoint or lazy)."""
+
+    def deco(build):
+        name = f"{build.__module__}.{build.__qualname__}"
+        sig = inspect.signature(build)
+
+        def artifact_key(spark: SparkSession, sf_dir: str, *args, **kwargs) -> tuple:
+            bound = sig.bind(spark, sf_dir, *args, **kwargs)
+            bound.apply_defaults()
+            rest = tuple(bound.arguments.values())[2:]
+            return (name, session_cache_key(spark, sf_dir, *tables), rest)
+
+        @functools.wraps(build)
+        def memoized(spark: SparkSession, sf_dir: str, *args, **kwargs):
+            key = artifact_key(spark, sf_dir, *args, **kwargs)
+            return memoize(key, lambda: build(spark, sf_dir, *args, **kwargs))
+
+        memoized.artifact_key = artifact_key
+        return memoized
+
+    return deco
 
 
 def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan one catalog table as a DataFrame (lazy; pushdown-capable).
+
+    The handle is session-memoized (r15): ``spark.read.parquet`` costs
+    ~80 ms of driver-side listing, footer inference and py4j round trips,
+    paid one to three times inside every query build. The memoized object
+    is an UNMATERIALIZED plan — every action still reads the files and
+    plans afresh — so only the schema discovery is reused, and a fixture
+    regenerated in place re-infers (the key carries its fingerprint).
 
     events.ts normalization is schema-adaptive — fixtures have shipped both
     parquet TIMESTAMP(NANOS) and TIMESTAMP(MICROS), and a reader that
@@ -109,17 +160,8 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; catalog: {TABLES}")
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.abspath(path),
-        fixture_fingerprint(sf_dir, name),
-    )
-    cached = _TABLE_HANDLE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    out = _build_table(spark, sf_dir, name, path)
-    _TABLE_HANDLE_CACHE[key] = out
-    return out
+    key = ("table", session_cache_key(spark, sf_dir, name), (name,))
+    return memoize(key, lambda: _build_table(spark, sf_dir, name, path))
 
 
 def _build_table(
@@ -360,12 +402,6 @@ def read_lake(spark: SparkSession, path: str, fmt: str = "delta") -> DataFrame:
             f"--packages; provider {_LAKE_PROVIDERS[fmt]} not loadable)"
         )
     return spark.read.format(fmt).load(path)
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake connector — the ``read_lake`` delta lane (kept as the
-    round-1 entry point name)."""
-    return read_lake(spark, path, "delta")
 
 
 def _size_to_bytes(s: str) -> int:

@@ -1,5 +1,5 @@
 """Persisted dedup-artifact store: parquet round-trip of the session
-caches (operators/artifacts.py) — the "persist the kernel output at
+memo (operators/artifacts.py) — the "persist the kernel output at
 ingest" production story as tested behavior."""
 
 import json
@@ -15,6 +15,7 @@ from mapreduce_framework_api_spark.operators.artifacts import (
 )
 from mapreduce_framework_api_spark.registry import load_all_queries
 from mapreduce_framework_api_spark.session import clear_session_caches
+from mapreduce_framework_api_spark.sources import peek_artifact
 
 QUERIES = load_all_queries()
 
@@ -23,10 +24,21 @@ def _canon(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _assert_served_from_store(spark, *builders):
+    """Each builder must return exactly the object the store load seeded.
+    The memo is peeked BEFORE the builder runs, so a seed stored under a
+    key that drifted from the builder's own key fails here instead of
+    quietly rebuilding from the fixture."""
+    for builder in builders:
+        seeded = peek_artifact(builder.artifact_key(spark, SF_DIR))
+        assert seeded is not None, f"{builder.__name__} was not seeded"
+        assert builder(spark, SF_DIR) is seeded, builder.__name__
+
+
 def test_artifact_store_roundtrip_serves_queries(spark, tmp_path):
     """persist → clear caches → load → every query downstream of a
     persisted artifact returns byte-identical results while the kernels
-    never re-run (the builders are served from the seeded caches). The
+    never re-run (the builders are served from the seeded memo). The
     store must also report the same row counts it wrote."""
     store = str(tmp_path / "artifacts")
     clear_session_caches()
@@ -52,15 +64,11 @@ def test_artifact_store_roundtrip_serves_queries(spark, tmp_path):
         clear_session_caches()
         loaded = load_dedup_artifacts(spark, SF_DIR, store)
         assert loaded == counts
-        # The seeded caches ARE the seam: the builders must now return
-        # the parquet-backed frames, and the queries must agree exactly.
-        from mapreduce_framework_api_spark.operators import dedup
-        from mapreduce_framework_api_spark.sources.readers import (
-            session_cache_key,
-        )
+        # The seeded memo IS the seam: every builder must now return the
+        # parquet-backed frame, and the queries must agree exactly.
+        from mapreduce_framework_api_spark.operators.artifacts import _artifact_specs
 
-        key = session_cache_key(spark, SF_DIR, "documents")
-        assert dedup.shingle_table(spark, SF_DIR) is dedup._SHINGLE_TABLE_CACHE[key]
+        _assert_served_from_store(spark, *_artifact_specs().values())
         for name, want in fresh.items():
             assert _canon(QUERIES[name].fn(spark, SF_DIR)) == want, name
     finally:
@@ -131,6 +139,13 @@ def test_ingest_index_store_roundtrip_serves_all_four_lanes(spark, tmp_path):
         clear_session_caches()
         loaded_counts = load_ingest_indexes(spark, SF_DIR, store)
         assert loaded_counts == counts
+        _assert_served_from_store(
+            spark,
+            dedup.incremental_corpus_index,
+            dedup.prefix_corpus_index,
+            dedup.bk_corpus_index,
+            similarity.semdedup_corpus_index,
+        )
         loaded, cent_loaded = run_all()  # builders now serve the store
         assert loaded == fresh
         assert (cent_fresh is None) == (cent_loaded is None)
@@ -245,7 +260,7 @@ def test_ann_store_roundtrip_serves_all_tiers(spark, tmp_path):
     re-run every tier query served off them (_ANN_TIERS — the composed
     IVF-PQ operating points ride the ivf half + their own code table):
     results must be byte-identical to the
-    fresh-built run (the caches now hold the store's parquet scans, so
+    fresh-built run (the memo now holds the store's parquet scans, so
     norms/codes/assignments/tokens all come off disk instead of their
     build kernels). The IVF centroid matrix and PQ codebook tensor must
     round-trip the manifest exactly."""
@@ -256,7 +271,6 @@ def test_ann_store_roundtrip_serves_all_tiers(spark, tmp_path):
         load_ann_indexes,
         persist_ann_indexes,
     )
-    from mapreduce_framework_api_spark.sources.readers import session_cache_key
 
     store = str(tmp_path / "ann_idx")
     clear_session_caches()
@@ -282,16 +296,19 @@ def test_ann_store_roundtrip_serves_all_tiers(spark, tmp_path):
         clear_session_caches()
         loaded = load_ann_indexes(spark, SF_DIR, store)
         assert loaded == counts
-        # The seeded caches ARE the seam: the serving-table builders must
+        # The seeded memo IS the seam: every serving-index builder must
         # now return the parquet-backed frames...
-        key = session_cache_key(spark, SF_DIR, "embeddings")
-        assert (
-            similarity.vec_norm_table(spark, SF_DIR)
-            is similarity._VEC_NORMS_CACHE[key]
-        )
-        assert (
-            similarity.lsh_code_table(spark, SF_DIR)
-            is similarity._LSH_CODES_CACHE[key]
+        _assert_served_from_store(
+            spark,
+            similarity.vec_norm_table,
+            similarity.lsh_code_table,
+            similarity.ivf_index,
+            similarity.pq_index,
+            similarity.pq_hq_index,
+            similarity.ivf_scaled_index,
+            similarity.ivf_trained_index,
+            similarity.pq_res_index,
+            similarity.maxsim_token_table,
         )
         _, cq_loaded = similarity.ivf_index(spark, SF_DIR)
         _, cbook_loaded = similarity.pq_index(spark, SF_DIR)
@@ -351,9 +368,7 @@ def test_repersist_crash_leaves_no_loadable_stale_manifest(
         def boom(*_a, **_k):
             raise RuntimeError("simulated mid-persist crash")
 
-        monkeypatch.setattr(
-            artifacts, "_artifact_specs", lambda: {"shingle_table": (boom, {})}
-        )
+        monkeypatch.setattr(artifacts, "_artifact_specs", lambda: {"shingle_table": boom})
         with pytest.raises(RuntimeError, match="simulated mid-persist crash"):
             persist_dedup_artifacts(spark, SF_DIR, store)
         monkeypatch.undo()
@@ -584,10 +599,10 @@ def test_ann_store_tombstone_shadows_then_compact_reclaims(spark, tmp_path):
 
     clear_session_caches()
     load_ann_indexes(spark, SF_DIR, store)
-    key = similarity.session_cache_key(spark, SF_DIR, "embeddings")
+    key = similarity.vec_norm_table.artifact_key(spark, SF_DIR)
     served_norm_ids = {
         r["vec_id"]
-        for r in similarity._VEC_NORMS_CACHE[key].select("vec_id").collect()
+        for r in peek_artifact(key).select("vec_id").collect()
     }
     orig_ids = {r[0] for r in orig["vec_norms"]}
     assert served_norm_ids == orig_ids - del_ids
@@ -630,7 +645,7 @@ def test_ann_store_tombstone_shadows_then_compact_reclaims(spark, tmp_path):
     load_ann_indexes(spark, SF_DIR, store)
     still = {
         r["vec_id"]
-        for r in similarity._VEC_NORMS_CACHE[key].select("vec_id").collect()
+        for r in peek_artifact(key).select("vec_id").collect()
     }
     assert victim["vec_id"] not in still
 
@@ -654,7 +669,7 @@ def test_ann_store_tombstone_shadows_then_compact_reclaims(spark, tmp_path):
     load_ann_indexes(spark, SF_DIR, store)
     post = {
         r["vec_id"]
-        for r in similarity._VEC_NORMS_CACHE[key].select("vec_id").collect()
+        for r in peek_artifact(key).select("vec_id").collect()
     }
     assert post == still
     append_ann_indexes(
@@ -669,7 +684,7 @@ def test_ann_store_tombstone_shadows_then_compact_reclaims(spark, tmp_path):
     load_ann_indexes(spark, SF_DIR, store)
     back = {
         r["vec_id"]
-        for r in similarity._VEC_NORMS_CACHE[key].select("vec_id").collect()
+        for r in peek_artifact(key).select("vec_id").collect()
     }
     assert victim["vec_id"] in back
     clear_session_caches()
@@ -760,8 +775,8 @@ def test_ann_store_reband_after_growth(spark, tmp_path):
     # (base fixture still derives g=4) and serves the rebanded codes
     clear_session_caches()
     load_ann_indexes(spark, base_dir, store)
-    key = similarity.session_cache_key(spark, base_dir, "embeddings")
-    served = _canon_rows(similarity._LSH_CODES_CACHE[key])
+    key = similarity.lsh_code_table.artifact_key(spark, base_dir)
+    served = _canon_rows(peek_artifact(key))
     assert served == stored_codes
 
     # (5) a second reband with no growth is a logged no-op
@@ -1064,12 +1079,12 @@ def test_ann_store_retrain_matches_fresh_build(spark, tmp_path):
     assert m_post["rows"]["pq_hq_codes"] == m_pre["rows"]["pq_hq_codes"]
     assert m_post["pq_hq_codebook"] == m_pre["pq_hq_codebook"]
 
-    # (4) the retrained store loads; the scaled cache serves the
-    # rewritten table + refreshed centroids
+    # (4) the retrained store loads; the scaled index's memo entry
+    # serves the rewritten table + refreshed centroids
     clear_session_caches()
     load_ann_indexes(spark, base_dir, store)
-    key = similarity.session_cache_key(spark, base_dir, "embeddings")
-    served, cq_served = similarity._IVF_SCALED_INDEX_CACHE[key]
+    key = similarity.ivf_scaled_index.artifact_key(spark, base_dir)
+    served, cq_served = peek_artifact(key)
     assert served.count() == 140
     assert cq_served.tolist() == m_fresh["ivf_scaled_centroids"]
     clear_session_caches()

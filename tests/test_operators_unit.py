@@ -5,6 +5,8 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mapreduce_framework_api_spark.session import clear_session_caches
+
 
 def test_full_outer_preserves_both_orphan_sides(spark):
     """The sf fixtures are referentially complete, so the outer branches of
@@ -398,7 +400,7 @@ def test_stop_shingle_cap_bounds_viral_shingle(spark, tmp_path):
     doc_pq = str(tmp_path / "documents.parquet")
     df.coalesce(1).write.parquet(doc_pq)
 
-    dd._JACCARD_PAIR_CACHE.clear()
+    clear_session_caches()
     try:
         out = dd.jaccard_dup_pairs(spark, str(tmp_path)).collect()
         assert out == []  # hot shingle dropped; no other overlap exists
@@ -410,7 +412,7 @@ def test_stop_shingle_cap_bounds_viral_shingle(spark, tmp_path):
         oracle_sql = load_all_queries()["q_dedup_ngram_jaccard"].oracle
         assert con.execute(oracle_sql).fetchall() == []
     finally:
-        dd._JACCARD_PAIR_CACHE.clear()
+        clear_session_caches()
 
 
 def test_pii_scrub_redacts_and_matches_oracle(spark, tmp_path):
@@ -466,8 +468,7 @@ def test_canonical_election_longest_then_lowest_id(spark, tmp_path):
     df = spark.createDataFrame(docs, ["doc_id", "text", "n_chars"])
     df.coalesce(1).write.parquet(str(tmp_path / "documents.parquet"))
 
-    dd._JACCARD_PAIR_CACHE.clear()
-    dd._CLUSTER_LABEL_CACHE.clear()
+    clear_session_caches()
     try:
         q = load_all_queries()["q_dedup_canonical"]
         rows = {r["doc_id"]: r for r in q.fn(spark, str(tmp_path)).collect()}
@@ -478,8 +479,7 @@ def test_canonical_election_longest_then_lowest_id(spark, tmp_path):
         assert rows[11]["is_canonical"] == 0
         assert rows[12]["is_canonical"] == 0
     finally:
-        dd._JACCARD_PAIR_CACHE.clear()
-        dd._CLUSTER_LABEL_CACHE.clear()
+        clear_session_caches()
 
 
 def test_salted_join_equals_plain_join_under_extreme_skew(spark):
@@ -1966,7 +1966,7 @@ def test_shingle_fallback_matches_oracle_on_short_docs(spark, tmp_path):
     doc_pq = str(tmp_path / "documents.parquet")
     df.coalesce(1).write.parquet(doc_pq)
 
-    dd._JACCARD_PAIR_CACHE.clear()
+    clear_session_caches()
     try:
         got = {
             (r["doc_a"], r["doc_b"], r["jaccard"])
@@ -1981,7 +1981,7 @@ def test_shingle_fallback_matches_oracle_on_short_docs(spark, tmp_path):
         assert got == want
         assert (0, 1, 1.0) in got  # the pair the raw-text fallback would drop
     finally:
-        dd._JACCARD_PAIR_CACHE.clear()
+        clear_session_caches()
 
 
 def test_edge_corpus_zero_token_docs_agree_across_engines():
@@ -2107,31 +2107,52 @@ def test_session_cache_key_tracks_fixture_regeneration(spark, tmp_path):
 
     from conftest import SF_DIR
 
-    from mapreduce_framework_api_spark.operators.text import (
-        _WORDCOUNT_CACHE,
-        corpus_wordcount,
-    )
-    from mapreduce_framework_api_spark.sources import session_cache_key
+    from mapreduce_framework_api_spark.operators.text import corpus_wordcount
+    from mapreduce_framework_api_spark.sources import peek_artifact
 
     sf = str(tmp_path / "sf")
     (tmp_path / "sf").mkdir()
     src = f"{SF_DIR}/documents.parquet"
     dst = f"{sf}/documents.parquet"
     shutil.copy(src, dst)
-    k1 = session_cache_key(spark, sf, "documents")
+    k1 = corpus_wordcount.artifact_key(spark, sf)
     n1 = corpus_wordcount(spark, sf).count()
-    assert k1 in _WORDCOUNT_CACHE
+    assert peek_artifact(k1) is not None
     # regenerate in place: same path, new bytes/mtime
     import os as _os
     import time as _time
 
     _time.sleep(0.01)
     _os.utime(dst)  # any rewrite bumps mtime_ns; utime models it exactly
-    k2 = session_cache_key(spark, sf, "documents")
+    k2 = corpus_wordcount.artifact_key(spark, sf)
     assert k2 != k1, "fingerprint must change when the fixture is rewritten"
     n2 = corpus_wordcount(spark, sf).count()
     assert n2 == n1  # same content -> same counts, via a REBUILT artifact
-    assert k2 in _WORDCOUNT_CACHE
+    assert peek_artifact(k2) is not None
+
+
+def test_empty_corpus_none_result_is_memoized(spark, tmp_path, monkeypatch):
+    """A builder that returns None on an empty corpus (ivf_index: no
+    vectors, no quantizer) stores that None in the session memo like any
+    other result: the second call is a memo hit and never reaches the
+    builder's seed pull again."""
+    from mapreduce_framework_api_spark.operators import similarity
+
+    spark.createDataFrame([], "vec_id long, embedding array<float>").write.parquet(
+        str(tmp_path / "embeddings.parquet")
+    )
+    calls = []
+    seed = similarity._corpus_seed
+    monkeypatch.setattr(
+        similarity, "_corpus_seed", lambda *a: calls.append(a) or seed(*a)
+    )
+    clear_session_caches()
+    try:
+        assert similarity.ivf_index(spark, str(tmp_path)) is None
+        assert similarity.ivf_index(spark, str(tmp_path)) is None
+        assert len(calls) == 1
+    finally:
+        clear_session_caches()
 
 
 def test_containment_catches_inclusion_jaccard_misses(spark):

@@ -198,41 +198,42 @@ def test_window_policy():
 
 def test_every_module_level_cache_is_wired_into_the_clearer():
     """Structural completeness of clear_session_caches (VERDICT r9 task
-    6): every module-level ``*_CACHE`` dict anywhere in the package must
-    be emptied by the clearer — the partitioning-invariance sweep's
-    correctness depends on it, and the r7 _PREFIX_INDEX_CACHE escape
-    (a new cache added without wiring) has already recurred once. The
-    test discovers caches by reflection over EVERY package module (so a
-    cache added to a module the clearer doesn't even import yet still
-    fails here), plants a sentinel in each, calls the clearer, and
-    requires all of them empty. No Spark needed: the dicts are plain
-    module globals."""
+    6): every session artifact lives in ONE memo
+    (sources.readers._SESSION_ARTIFACTS) and the clearer empties it.
+    Twice (r7, r15) a hand-wired module-level ``*_CACHE`` dict escaped the
+    old clearer's list and broke the partitioning-invariance sweep, so
+    the test reflects over EVERY package module (a cache added to a
+    module the clearer never imports still fails here) and requires that
+    no ``*_CACHE`` dict exists at all, then plants a sentinel in the memo
+    and requires the clearer to empty it. No Spark needed: the memo is a
+    plain module global."""
     import importlib
     import pkgutil
 
     import mapreduce_framework_api_spark as pkg
     from mapreduce_framework_api_spark.session import clear_session_caches
+    from mapreduce_framework_api_spark.sources import readers
 
-    found = {}  # "module.NAME" -> dict object
+    scanned, stray = [], []
     for m in pkgutil.walk_packages(pkg.__path__, prefix=pkg.__name__ + "."):
         mod = importlib.import_module(m.name)
-        for attr, val in vars(mod).items():
-            if attr.endswith("_CACHE") and isinstance(val, dict):
-                found[f"{m.name}.{attr}"] = val
-    assert len(found) >= 18, (
-        f"reflection found only {len(found)} caches — the scan itself broke: "
-        f"{sorted(found)}"
+        scanned.append(m.name)
+        stray += [
+            f"{m.name}.{attr}"
+            for attr, val in vars(mod).items()
+            if attr.endswith("_CACHE") and isinstance(val, dict)
+        ]
+    assert "mapreduce_framework_api_spark.operators.similarity" in scanned, (
+        f"the module scan itself broke: {scanned}"
+    )
+    assert not stray, (
+        f"module-level cache dicts outside the session memo (use "
+        f"sources.session_artifact / memoize instead): {sorted(stray)}"
     )
     sentinel = ("__cache_wiring_probe__",)
-    for d in found.values():
-        d[sentinel] = None
+    readers._SESSION_ARTIFACTS[sentinel] = None
     try:
         clear_session_caches()
-        unwired = sorted(name for name, d in found.items() if d)
-        assert not unwired, (
-            f"module-level caches NOT cleared by clear_session_caches "
-            f"(wire them in session.py): {unwired}"
-        )
+        assert not readers._SESSION_ARTIFACTS
     finally:
-        for d in found.values():
-            d.pop(sentinel, None)
+        readers._SESSION_ARTIFACTS.pop(sentinel, None)

@@ -111,12 +111,15 @@ def main() -> int:
         t0 = time.perf_counter()
         n_rows = registry[q_search].fn(spark, sf_dir).count()
         cold = time.perf_counter() - t0
-        # warm: the ivf_index + tier caches are populated; re-time the
-        # search with ONLY the tier-output cache dropped (the serving
-        # shape: frozen index, fresh query wave)
+        # warm: the ivf_index + tier outputs are memoized; re-time the
+        # search with ONLY the tier-output entries dropped from the
+        # session memo (the serving shape: frozen index, fresh query wave)
         from mapreduce_framework_api_spark.operators import similarity
+        from mapreduce_framework_api_spark.sources import readers
 
-        similarity._TIER_OUT_CACHE.clear()
+        memo = readers._SESSION_ARTIFACTS
+        for key in [k for k in memo if k[0] == similarity._TIER_OUT]:
+            del memo[key]
         t0 = time.perf_counter()
         registry[q_search].fn(spark, sf_dir).count()
         warm = time.perf_counter() - t0
