@@ -575,7 +575,7 @@ def q_pipe_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROW_NUMBER windows — there is no global sort anywhere. The per-shard
     window is the unavoidable cost of materializing positions; it stays
     bounded because production sets shards ≈ corpus_rows / shard_rows
-    (this registration pins {_SHUFFLE_SHARDS} so the oracle is exact at
+    (this registration pins _SHUFFLE_SHARDS = 32 so the oracle is exact at
     fixture scale). The md5 sort key inside each shard is what makes the
     order pseudo-random rather than id-ordered."""
     d = table(spark, sf_dir, "documents").select("doc_id")
@@ -639,10 +639,10 @@ def q_pipe_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The per-language prefix sum is a TWO-LEVEL distributed scan — the
     q_pipe_pack_chunks pattern generalized per group: the md5 hex prefix
-    splits each language's hash order into {_BUDGET_BLOCKS} contiguous
+    splits each language's hash order into _BUDGET_BLOCKS (256) contiguous
     blocks, (1) parallel windows compute running sums within (lang,
     block), (2) block totals are prefix-summed over ONE ROW PER (lang,
-    block) — bounded by languages × {_BUDGET_BLOCKS}, never corpus rows —
+    block) — bounded by languages × _BUDGET_BLOCKS, never corpus rows —
     and broadcast back as offsets. The oracle's flat per-language window
     is the single-partition sort this plan avoids: at 100 TB the dominant
     language IS most of the corpus, so a per-lang window without the

@@ -65,6 +65,8 @@ from __future__ import annotations
 
 import math
 import os
+from collections.abc import Callable
+from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
@@ -1688,67 +1690,6 @@ def q_sim_pq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
 # separate split/nprobe-agnostic artifacts.
 _IVFPQ_TOP_K = 3
 
-_IVFPQ_ORACLE = f"""
-WITH {_IVF_ASSIGN_CTES}, pqe AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
-  FROM embeddings
-), pqseed AS (
-  SELECT vec_id, piv FROM pqe
-  ORDER BY md5('pq#' || CAST(vec_id AS VARCHAR)), vec_id LIMIT {_PQ_K}
-), pqcb AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, piv FROM pqseed
-), ms AS (
-  SELECT unnest(range(0, {_PQ_M})) AS m
-), cbm AS (
-  SELECT k, m, pqcb.piv[m * {_PQ_SUB} + 1 : m * {_PQ_SUB} + {_PQ_SUB}] AS c
-  FROM pqcb CROSS JOIN ms
-), xm AS (
-  SELECT vec_id, m, piv[m * {_PQ_SUB} + 1 : m * {_PQ_SUB} + {_PQ_SUB}] AS x
-  FROM pqe CROSS JOIN ms
-), d AS (
-  SELECT x.vec_id, x.m, c.k,
-         list_dot_product(x.x, x.x)
-           - 2 * list_dot_product(x.x, c.c)
-           + list_dot_product(c.c, c.c) AS d2
-  FROM xm x JOIN cbm c ON x.m = c.m
-), code AS (
-  SELECT vec_id, m, k FROM (
-    SELECT vec_id, m, k,
-           ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                              ORDER BY d2 ASC, k ASC) AS rk
-    FROM d
-  ) WHERE rk = 1
-), probes AS (
-  SELECT vec_id AS q_id, c AS cluster FROM probe_rank WHERE pr <= {_IVF_NPROBE}
-), cand AS (
-  SELECT DISTINCT p.q_id, a.vec_id AS n_id
-  FROM probes p JOIN assigned a USING (cluster)
-  WHERE p.q_id <> a.vec_id
-), qm AS (
-  SELECT vec_id AS q_id, m,
-         piv[m * {_PQ_SUB} + 1 : m * {_PQ_SUB} + {_PQ_SUB}] AS q
-  FROM pqe CROSS JOIN ms
-), adc AS (
-  SELECT c.q_id, c.n_id,
-         CAST(SUM(list_dot_product(qm.q, cbm.c)) AS BIGINT) AS adc_score
-  FROM cand c
-  JOIN qm ON qm.q_id = c.q_id
-  JOIN code co ON co.vec_id = c.n_id AND co.m = qm.m
-  JOIN cbm ON cbm.m = co.m AND cbm.k = co.k
-  GROUP BY c.q_id, c.n_id
-), ranked AS (
-  SELECT q_id AS vec_id, n_id AS neighbor_id, adc_score,
-         ROW_NUMBER() OVER (PARTITION BY q_id
-                            ORDER BY adc_score DESC, n_id ASC) AS rk
-  FROM adc
-)
-SELECT vec_id, neighbor_id, adc_score, rk
-FROM ranked WHERE rk <= {_IVFPQ_TOP_K}
-ORDER BY vec_id, rk
-"""  # shared with q_sim_ivfpq_recall's composed oracle
-
 
 def _ivfpq_search(
     spark: SparkSession,
@@ -1763,11 +1704,10 @@ def _ivfpq_search(
     index_ids: DataFrame | None = None,
     cache_depth: int | None = None,
 ) -> DataFrame:
-    """The composed IVF-PQ search plan, shared by all registered
-    operating points (the default 64×-compression tier, the
-    high-quality 8× tier, and the corpus-scaled-K tier — they differ
+    """The composed IVF-PQ search plan, shared by every operating point
+    in the _IVFPQ_POINTS table and the filtered search — they differ
     only in codebook geometry, probe width, and — via ``ivf_fn`` —
-    which coarse quantizer routes). Plan shape: index side = the assigned frame's
+    which coarse quantizer routes. Plan shape: index side = the assigned frame's
     (vec_id, cluster) equi-joined to the code table (two thin columns;
     the 64-float embeddings are NEVER read on the index side — the
     memory-bound regime's point); query side = raw vectors exploded
@@ -1909,102 +1849,13 @@ def _ivfpq_search(
     )
 
 
-@register(
-    "q_sim_ivfpq_topk",
-    group="I",
-    oracle=_IVFPQ_ORACLE,
-)
-def q_sim_ivfpq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ composed ANN (the SIXTH similarity tier): every vector
-    queries its _IVF_NPROBE nearest inverted lists (the IVF coarse
-    quantizer's integer-exact routing) and candidates are scored by PQ
-    asymmetric distance (per query, one 4×16 lookup table of subspace
-    dot products; per candidate, 4 table gathers on its one-byte codes).
-    This is the composition production vector search actually deploys at
-    scale — IVF bounds the candidate COUNT, PQ bounds the candidate
-    BYTES — and both halves come straight off the serving-index seams
-    (ivf_index routing + pq_index codes), so a loaded ANN store serves
-    the whole tier with zero build kernels.
-
-    Plan shape: index side = the assigned frame's (vec_id, cluster)
-    equi-joined to the code table (two thin columns; the 64-float
-    embeddings are NEVER read on the index side — the memory-bound
-    regime's point); query side = raw vectors exploded over their probe
-    slice; ONE cogroup on cluster id with an Arrow-batched LUT-gather
-    kernel per (query-batch × inverted list), per-list top-k inside the
-    kernel, global window re-rank. Integer end to end (the ADC scores
-    are exact int64 — same headroom argument as the PQ tier), so the
-    differential oracle is FULL: the SQL mirror composes the IVF
-    assignment CTE chain with the PQ codebook/encoding CTEs verbatim."""
-    return _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_index,
-        _ivf_nprobe(),
-        _PQ_M,
-        _PQ_SUB,
-        _IVFPQ_TOP_K,
-        f"ivfpq_topk@p{_ivf_nprobe()}",
-    )
-
-
-@register(
-    "q_sim_ivfpq_recall",
-    group="I",
-    oracle=f"""
-WITH ivfpq AS (
-  {_IVFPQ_ORACLE}
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
-  FROM embeddings
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(q.piv, x.piv) DESC, x.vec_id ASC) AS rk
-    FROM base q JOIN base x ON q.vec_id <> x.vec_id
-  ) WHERE rk <= {_IVFPQ_TOP_K} AND {_recall_sample_sql("query_id")}
-), hits AS (
-  SELECT COUNT(*) AS n_hits
-  FROM ivfpq JOIN exact
-    ON ivfpq.vec_id = exact.query_id
-   AND ivfpq.neighbor_id = exact.neighbor_id
-), tot AS (
-  SELECT COUNT(*) AS n_truth, COUNT(DISTINCT query_id) AS n_queries FROM exact
-)
-SELECT CAST(n_queries AS BIGINT) AS n_queries,
-       CAST(n_truth AS BIGINT) AS n_truth,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       CAST(n_hits * 10000 // n_truth AS BIGINT) AS recall_x10000
-FROM hits, tot
-""",
-)
-def q_sim_ivfpq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the composed IVF-PQ tier against the exact integer-dot
-    ground truth (the objective ADC approximates), on the deterministic
-    md5-sampled evaluation-query subset — the per-tier evaluation row
-    every other ANN tier already carries. Composed losses show up here
-    TOGETHER (routing loss: the true neighbor's list wasn't probed;
-    quantization loss: ADC misranked within a probed list), which is the
-    number a deployment actually tunes nprobe/codebook against. Truth
-    side: the same cogroup_block_pairs engine with an exact int-dot
-    kernel over sampled queries × full corpus and SELF-EXCLUSION (the
-    symmetric-query shape); cost ∝ |sample| × corpus, never quadratic."""
-    ivfpq = q_sim_ivfpq_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(ivfpq, exact)
-
-
 def _ivfpq_exact_truth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact integer-dot top-3 ground truth on the md5-sampled
-    evaluation queries — the shared truth BOTH composed-tier recall
-    instruments (default and HQ operating points) grade against, built
-    once per session (_tier_cached): same objective (int dot at
-    _PQ_SCALE), same sample, same k, so the two recall numbers are
-    directly comparable points on one operating curve."""
+    evaluation queries — the shared truth all eight composed-tier recall
+    instruments (every _IVFPQ_POINTS recall and rerank_recall query)
+    grade against, built once per session (_tier_cached): same objective
+    (int dot at _PQ_SCALE), same sample, same k, so the eight recall
+    numbers are directly comparable points on one operating curve."""
     import numpy as np
     import pandas as pd
 
@@ -2165,28 +2016,33 @@ def _hq_nprobe() -> int:
     shipped default."""
     return _env_int_knob("SPARK_GRAFT_IVFPQ_HQ_NPROBE", _HQ_NPROBE, _IVF_K)
 
-# The full HQ CTE chain (assignment → codebook → codes → probes → ADC →
-# ranked), shared verbatim by the tier oracle, its recall oracle, the
-# exact-rerank oracle, and (with ``cand_pred``) the filtered-search
-# oracle — one chain, many consumers, zero drift. ``cand_pred`` appends
-# a predicate to the candidate CTE's WHERE — the hybrid-search filter,
-# applied BEFORE ADC scoring exactly where the Spark plan applies it.
-def _ivfpq_hq_chain(
+
+# The full composed CTE chain (assignment → codebook → codes → probes →
+# ADC → ranked), shared verbatim by every _IVFPQ_POINTS oracle (topk,
+# recall, rerank, rerank_recall) and, with ``cand_pred``, the
+# filtered-search oracle — one chain, many consumers, zero drift.
+def _ivfpq_chain(
+    salt: str = "pqhq#",
+    K: int = _HQ_K,
+    M: int = _HQ_M,
+    SUB: int = _HQ_SUB,
+    nprobe: int | str = _HQ_NPROBE,
+    assign_ctes: str = _IVF_ASSIGN_CTES,
     cand_pred: str = "",
-    assign_ctes: str | None = None,
-    probes_body: str | None = None,
     residual: bool = False,
 ) -> str:
-    """ONE HQ codebook/ADC CTE chain for every composed oracle (the
-    tier, its recall, the exact rerank, the filtered search, AND — via
-    ``assign_ctes``/``probes_body`` — the corpus-scaled router): the
-    r14 self-review found the scaled oracle carrying a verbatim copy of
-    these CTEs, the exact drift channel the 'one chain, many consumers'
-    invariant exists to close. ``assign_ctes`` swaps the router prefix
-    (default: the fixed-K _IVF_ASSIGN_CTES); ``probes_body`` swaps the
-    probe-width predicate (default: the shipped _HQ_NPROBE; the scaled
-    chain reads its derived np from the npp CTE); ``cand_pred`` appends
-    the hybrid-search filter to the candidate CTE's WHERE.
+    """ONE codebook/ADC CTE chain for every composed oracle, over the
+    codebook geometry (md5 seed ``salt``, ``K`` entries, ``M`` subspaces
+    of ``SUB`` dims — the pq_index or pq_hq_index build parameters) and
+    the oracle's probe width ``nprobe`` (an int, or a scalar SQL
+    expression such as the scaled routers' ``(SELECT np FROM npp)``):
+    the r14 self-review found the scaled oracle carrying a verbatim copy
+    of these CTEs, the exact drift channel the 'one chain, many
+    consumers' invariant exists to close. ``assign_ctes`` swaps the router prefix
+    (default: the fixed-K _IVF_ASSIGN_CTES; it must define
+    ``probe_rank`` and ``assigned``); ``cand_pred`` appends the
+    hybrid-search filter to the candidate CTE's WHERE — applied BEFORE
+    ADC scoring, exactly where the Spark plan applies it.
 
     ``residual=True`` (VERDICT r14 task 3 — the standard IVFADC
     accuracy lever) switches the ENCODED quantity from the raw piv
@@ -2200,13 +2056,6 @@ def _ivfpq_hq_chain(
     with far less error. Requires the default fixed-K ``assign_ctes``
     (the ``seed`` CTE supplies centroid ids + vectors); all integers,
     so the oracle stays FULL."""
-    if assign_ctes is None:
-        assign_ctes = _IVF_ASSIGN_CTES
-    if probes_body is None:
-        probes_body = (
-            f"SELECT vec_id AS q_id, c AS cluster FROM probe_rank "
-            f"WHERE pr <= {_HQ_NPROBE}"
-        )
     # residual mode: centroids at _PQ_SCALE (seedc), per-vector residuals
     # (rv, aliased piv so the codebook/encode CTEs read either source
     # unchanged); the encoded source swaps from pqe to rv, queries stay
@@ -2222,9 +2071,17 @@ def _ivfpq_hq_chain(
   JOIN seedc sc ON sc.c = a.cluster
 )""" if residual else ""
     enc_src = "rv" if residual else "pqe"
+    split = f"SELECT k, m, pqcb.piv[m * {SUB} + 1 : m * {SUB} + {SUB}] AS c"
+    adc_sum = """SELECT c.q_id, c.n_id,
+         CAST(SUM(list_dot_product(qm.q, cbm.c)) AS BIGINT) AS {}
+  FROM cand c
+  JOIN qm ON qm.q_id = c.q_id
+  JOIN code co ON co.vec_id = c.n_id AND co.m = qm.m
+  JOIN cbm ON cbm.m = co.m AND cbm.k = co.k
+  GROUP BY c.q_id, c.n_id"""
     # residual mode additionally TRAINS the codebook: _RES_CB_ITERS
     # per-subspace integer Lloyd passes over the corpus residuals,
-    # starting from the sampled-residual seeds (cbm0 = the hqcb
+    # starting from the sampled-residual seeds (cbm0 = the pqcb
     # subspace split) — same fixed-unroll exact-integer discipline as
     # the coarse trainer (_lloyd_cte_chain): argmin-d2 assignment with
     # (d2 ASC, k ASC) ties, per-(m, k) elementwise floor-division
@@ -2237,13 +2094,8 @@ def _ivfpq_hq_chain(
         )
 
     if residual:
-        assert _HQ_SUB == 2, "residual codebook trainer is specialized to SUB=2"
-        cb_ctes = [
-            f"""cbm0 AS (
-  SELECT k, m, hqcb.piv[m * {_HQ_SUB} + 1 : m * {_HQ_SUB} + {_HQ_SUB}] AS c
-  FROM hqcb CROSS JOIN ms
-)"""
-        ]
+        assert SUB == 2, "residual codebook trainer is specialized to SUB=2"
+        cb_ctes = [f"cbm0 AS (\n  {split}\n  FROM pqcb CROSS JOIN ms\n)"]
         for t in range(_RES_CB_ITERS):
             cb_ctes.append(f"""rd{t} AS (
   SELECT vec_id, m, k FROM (
@@ -2271,24 +2123,12 @@ def _ivfpq_hq_chain(
             f"cbm AS (\n  SELECT m, k, c FROM cbm{_RES_CB_ITERS}\n)"
         )
         cbm_ctes = ", ".join(cb_ctes)
-    else:
-        cbm_ctes = f"""cbm AS (
-  SELECT k, m, hqcb.piv[m * {_HQ_SUB} + 1 : m * {_HQ_SUB} + {_HQ_SUB}] AS c
-  FROM hqcb CROSS JOIN ms
-)"""
-    if residual:
         adc_ctes = f"""cterm AS (
   SELECT q.vec_id AS q_id, sc.c,
          CAST(list_dot_product(q.piv, sc.piv) AS BIGINT) AS dc
   FROM pqe q, seedc sc
 ), adcsum AS (
-  SELECT c.q_id, c.n_id,
-         CAST(SUM(list_dot_product(qm.q, cbm.c)) AS BIGINT) AS s
-  FROM cand c
-  JOIN qm ON qm.q_id = c.q_id
-  JOIN code co ON co.vec_id = c.n_id AND co.m = qm.m
-  JOIN cbm ON cbm.m = co.m AND cbm.k = co.k
-  GROUP BY c.q_id, c.n_id
+  {adc_sum.format("s")}
 ), adc AS (
   SELECT a.q_id, a.n_id, a.s + ct.dc AS adc_score
   FROM adcsum a
@@ -2296,29 +2136,22 @@ def _ivfpq_hq_chain(
   JOIN cterm ct ON ct.q_id = a.q_id AND ct.c = ax.cluster
 )"""
     else:
-        adc_ctes = """adc AS (
-  SELECT c.q_id, c.n_id,
-         CAST(SUM(list_dot_product(qm.q, cbm.c)) AS BIGINT) AS adc_score
-  FROM cand c
-  JOIN qm ON qm.q_id = c.q_id
-  JOIN code co ON co.vec_id = c.n_id AND co.m = qm.m
-  JOIN cbm ON cbm.m = co.m AND cbm.k = co.k
-  GROUP BY c.q_id, c.n_id
-)"""
+        cbm_ctes = f"cbm AS (\n  {split}\n  FROM pqcb CROSS JOIN ms\n)"
+        adc_ctes = f"adc AS (\n  {adc_sum.format('adc_score')}\n)"
     return f"""{assign_ctes}, pqe AS (
   SELECT vec_id,
          list_transform(embedding,
              x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
   FROM embeddings
-){res_ctes}, hqseed AS (
+){res_ctes}, pqseed AS (
   SELECT vec_id, piv FROM {enc_src}
-  ORDER BY md5('pqhq#' || CAST(vec_id AS VARCHAR)), vec_id LIMIT {_HQ_K}
-), hqcb AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, piv FROM hqseed
+  ORDER BY md5('{salt}' || CAST(vec_id AS VARCHAR)), vec_id LIMIT {K}
+), pqcb AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, piv FROM pqseed
 ), ms AS (
-  SELECT unnest(range(0, {_HQ_M})) AS m
+  SELECT unnest(range(0, {M})) AS m
 ), xm AS (
-  SELECT vec_id, m, piv[m * {_HQ_SUB} + 1 : m * {_HQ_SUB} + {_HQ_SUB}] AS x
+  SELECT vec_id, m, piv[m * {SUB} + 1 : m * {SUB} + {SUB}] AS x
   FROM {enc_src} CROSS JOIN ms
 ), {cbm_ctes}, d AS (
   SELECT x.vec_id, x.m, c.k,
@@ -2334,14 +2167,14 @@ def _ivfpq_hq_chain(
     FROM d
   ) WHERE rk = 1
 ), probes AS (
-  {probes_body}
+  SELECT vec_id AS q_id, c AS cluster FROM probe_rank WHERE pr <= {nprobe}
 ), cand AS (
   SELECT DISTINCT p.q_id, a.vec_id AS n_id
   FROM probes p JOIN assigned a USING (cluster)
   WHERE p.q_id <> a.vec_id{cand_pred}
 ), qm AS (
   SELECT vec_id AS q_id, m,
-         piv[m * {_HQ_SUB} + 1 : m * {_HQ_SUB} + {_HQ_SUB}] AS q
+         piv[m * {SUB} + 1 : m * {SUB} + {SUB}] AS q
   FROM pqe CROSS JOIN ms
 ), {adc_ctes}, ranked AS (
   SELECT q_id AS vec_id, n_id AS neighbor_id, adc_score,
@@ -2351,16 +2184,6 @@ def _ivfpq_hq_chain(
 )"""
 
 
-_IVFPQ_HQ_CHAIN = _ivfpq_hq_chain()
-
-_IVFPQ_HQ_ORACLE = f"""
-WITH {_IVFPQ_HQ_CHAIN}
-SELECT vec_id, neighbor_id, adc_score, rk
-FROM ranked WHERE rk <= {_IVFPQ_TOP_K}
-ORDER BY vec_id, rk
-"""  # shared with q_sim_ivfpq_hq_recall's composed oracle
-
-
 @session_artifact("embeddings")
 def pq_hq_index(spark: SparkSession, sf_dir: str):
     """The high-quality PQ serving index: _HQ_M=32 subspaces × 2 dims,
@@ -2368,89 +2191,6 @@ def pq_hq_index(spark: SparkSession, sf_dir: str):
     deployable-recall point on the curve. Persisted alongside the
     default index by operators/artifacts.py::persist_ann_indexes."""
     return _pq_index_build(spark, sf_dir, "pqhq#", _HQ_M, _HQ_SUB, _HQ_K)
-
-
-@register(
-    "q_sim_ivfpq_hq_topk",
-    group="I",
-    oracle=_IVFPQ_HQ_ORACLE,
-)
-def q_sim_ivfpq_hq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ at the HIGH-QUALITY operating point (VERDICT r12 task 4):
-    the same composed plan as q_sim_ivfpq_topk — IVF routing bounds the
-    candidate COUNT, PQ asymmetric distance bounds the candidate BYTES —
-    re-parameterized to the point a deployment would serve: 32
-    subspaces × 2 dims, 256-entry seed codebooks (32 B/vector, 8×
-    compression), nprobe=4. On this corpus's isotropic unit vectors
-    (product quantization's worst case) the measured recall@3 vs the
-    exact integer-dot truth is ~0.45-0.47 at sf0.001/0.01/0.1 — above
-    the plain IVF tier's ~0.30-0.33 at its shipped operating point —
-    because the wider probe more than buys back the quantization loss
-    while the per-candidate cost stays 32 one-byte table gathers. The
-    per-query LUT is 32×256 int64 (64 KB) — still corpus-size-
-    independent, built once per query batch inside the Arrow kernel.
-    Integer end to end; FULL differential oracle (the SQL mirror
-    composes the IVF CTE chain with the 256-entry codebook CTEs)."""
-    return _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        _hq_nprobe(),
-        _HQ_M,
-        _HQ_SUB,
-        _IVFPQ_TOP_K,
-        # one deep tier per family: the rerank sibling's 16-wide shortlist
-        # and this top-3 read share the tag (and the one cogroup pass)
-        f"ivfpq_hq_deep@p{_hq_nprobe()}",
-        cache_depth=_HQ_RERANK_R,
-    )
-
-
-@register(
-    "q_sim_ivfpq_hq_recall",
-    group="I",
-    oracle=f"""
-WITH ivfpq AS (
-  {_IVFPQ_HQ_ORACLE}
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
-  FROM embeddings
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(q.piv, x.piv) DESC, x.vec_id ASC) AS rk
-    FROM base q JOIN base x ON q.vec_id <> x.vec_id
-  ) WHERE rk <= {_IVFPQ_TOP_K} AND {_recall_sample_sql("query_id")}
-), hits AS (
-  SELECT COUNT(*) AS n_hits
-  FROM ivfpq JOIN exact
-    ON ivfpq.vec_id = exact.query_id
-   AND ivfpq.neighbor_id = exact.neighbor_id
-), tot AS (
-  SELECT COUNT(*) AS n_truth, COUNT(DISTINCT query_id) AS n_queries FROM exact
-)
-SELECT CAST(n_queries AS BIGINT) AS n_queries,
-       CAST(n_truth AS BIGINT) AS n_truth,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       CAST(n_hits * 10000 // n_truth AS BIGINT) AS recall_x10000
-FROM hits, tot
-""",
-)
-def q_sim_ivfpq_hq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the HIGH-QUALITY composed operating point against the
-    SAME exact integer-dot ground truth as q_sim_ivfpq_recall (the
-    shared _ivfpq_exact_truth build — one truth, two comparable curve
-    points): same md5 evaluation sample, same k, same objective. The
-    floor pin in tests/test_operators_unit.py asserts this number stays
-    at-or-above the plain IVF tier's recall on the same split — the r12
-    verdict's deployability bar for the composed tier."""
-    hq = q_sim_ivfpq_hq_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(hq, exact)
 
 
 # --- IVF-PQ + exact rerank (two-stage retrieval) -----------------------
@@ -2491,10 +2231,6 @@ ORDER BY vec_id, rk
 """
 
 
-_IVFPQ_HQ_RERANK_ORACLE = _rerank_oracle(_IVFPQ_HQ_CHAIN)
-# shared with q_sim_ivfpq_hq_rerank_recall's composed oracle
-
-
 def _int_vec(col: str):
     """array<float> → exact int64 quantization at _PQ_SCALE, as a pure
     JVM expression (the kernels' floor(x * scale) convention)."""
@@ -2526,86 +2262,6 @@ def _exact_refine(spark: SparkSession, sf_dir: str, short: DataFrame) -> DataFra
         .select("vec_id", "neighbor_id", dot.alias("dot"))
     )
     return _topk_rerank(ex, "vec_id", "dot", _IVFPQ_TOP_K)
-
-
-@register(
-    "q_sim_ivfpq_hq_rerank",
-    group="I",
-    oracle=_IVFPQ_HQ_RERANK_ORACLE,
-)
-def q_sim_ivfpq_hq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval: the HQ composed tier proposes an ADC top-16
-    shortlist per query (compressed-domain work — the expensive scan
-    stays code-sized), then an EXACT integer-dot refine over only those
-    16 candidates re-ranks to the final top-3 — the retrieve-then-rerank
-    shape production vector search deploys, because the shortlist only
-    has to CONTAIN the true neighbors for the refine to surface them.
-    Measured recall@3 vs exact truth: 0.469 → 0.516 at sf0.1 (the
-    nprobe=4 routing ceiling — quantization loss is fully bought back).
-    The refine is two thin equi-joins + a JVM fold dot (zip_with ×
-    aggregate — no Python), R rows per query regardless of corpus size;
-    at 100 TB this is the random-read refine against the stored vector
-    table. Integer end to end; FULL oracle (the HQ CTE chain with
-    rk <= 16 feeding an exact list_dot_product re-rank)."""
-    short = _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        _hq_nprobe(),
-        _HQ_M,
-        _HQ_SUB,
-        _HQ_RERANK_R,
-        f"ivfpq_hq_deep@p{_hq_nprobe()}",
-        cache_depth=_HQ_RERANK_R,
-    ).select("vec_id", "neighbor_id")
-    return _exact_refine(spark, sf_dir, short)
-
-
-@register(
-    "q_sim_ivfpq_hq_rerank_recall",
-    group="I",
-    oracle=f"""
-WITH reranked_q AS (
-  {_IVFPQ_HQ_RERANK_ORACLE}
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
-  FROM embeddings
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(q.piv, x.piv) DESC, x.vec_id ASC) AS rk
-    FROM base q JOIN base x ON q.vec_id <> x.vec_id
-  ) WHERE rk <= {_IVFPQ_TOP_K} AND {_recall_sample_sql("query_id")}
-), hits AS (
-  SELECT COUNT(*) AS n_hits
-  FROM reranked_q JOIN exact
-    ON reranked_q.vec_id = exact.query_id
-   AND reranked_q.neighbor_id = exact.neighbor_id
-), tot AS (
-  SELECT COUNT(*) AS n_truth, COUNT(DISTINCT query_id) AS n_queries FROM exact
-)
-SELECT CAST(n_queries AS BIGINT) AS n_queries,
-       CAST(n_truth AS BIGINT) AS n_truth,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       CAST(n_hits * 10000 // n_truth AS BIGINT) AS recall_x10000
-FROM hits, tot
-""",
-)
-def q_sim_ivfpq_hq_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the two-stage (HQ-ADC shortlist → exact refine)
-    retrieval against the SAME shared exact truth as the other composed
-    instruments — the third point on the operating curve: default ADC
-    0.07-ish, HQ ADC ~0.47, rerank ~0.52 (= the nprobe=4 routing
-    ceiling). What remains after the refine is pure ROUTING loss, so
-    this instrument is exactly the signal that says "spend your next
-    dollar on nprobe, not on the codebook"."""
-    rr = q_sim_ivfpq_hq_rerank(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(rr, exact)
 
 
 # --- Residual PQ encoding (IVFADC proper) ------------------------------
@@ -2735,58 +2391,6 @@ def pq_res_index(spark: SparkSession, sf_dir: str):
     return codes, cbook, cpq
 
 
-_IVFPQ_RES_ORACLE = f"""
-WITH {_ivfpq_hq_chain(residual=True)}
-SELECT vec_id, neighbor_id, adc_score, rk
-FROM ranked WHERE rk <= {_IVFPQ_TOP_K}
-ORDER BY vec_id, rk
-"""
-
-
-@register(
-    "q_sim_ivfpq_residual_topk",
-    group="I",
-    oracle=_IVFPQ_RES_ORACLE,
-)
-def q_sim_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with RESIDUAL encoding (VERDICT r14 task 3) at the HQ
-    cost envelope — same fixed-K router, same nprobe, same 32×256×2
-    codebook budget, same 32 B/vector — but codes quantize
-    (piv − coarse centroid) and the ADC score adds the exact integer
-    q·centroid term per probed list. The recall delta vs
-    q_sim_ivfpq_hq_recall isolates residual encoding's value (the
-    standard IVFADC accuracy lever), pinned >= in pytest. Integer end
-    to end; FULL oracle via the shared chain's residual mode."""
-    return _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_res_index,
-        _hq_nprobe(),
-        _HQ_M,
-        _HQ_SUB,
-        _IVFPQ_TOP_K,
-        f"ivfpq_res_topk@p{_hq_nprobe()}",
-    )
-
-
-@register(
-    "q_sim_ivfpq_residual_recall",
-    group="I",
-    oracle=_composed_recall_oracle(_IVFPQ_RES_ORACLE),
-)
-def q_sim_ivfpq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{_IVFPQ_TOP_K} of the residual-encoded point against the
-    shared exact truth — read next to q_sim_ivfpq_hq_recall (raw
-    encoding, identical everything else) this is the residual lever's
-    lift, and next to q_sim_ivfpq_hq_rerank_recall (the nprobe-4
-    routing ceiling) it reads how much of the quantization gap residual
-    coding closes WITHOUT the refine stage's random reads.
-    Floor-pinned."""
-    rr = q_sim_ivfpq_residual_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(rr, exact)
-
-
 # --- Corpus-scaled coarse quantizer (the K ~ sqrt(N) operating point) --
 # Every tier above routes through the FIXED _IVF_K = 16 coarse quantizer,
 # so probed-candidate work per query is nprobe * N/16 — linear in corpus
@@ -2867,16 +2471,17 @@ def ivf_scaled_index(spark: SparkSession, sf_dir: str):
     return assigned, cq
 
 
-# The scaled-quantizer CTE chain: identical to _IVF_ASSIGN_CTES except
-# the seed count comes FROM the data (kp), the seed hash is salted, and
-# the probe width np derives from kp — both engines compute K and nprobe
-# from the same COUNT(*), so the operating point self-scales without a
-# constant anywhere.
-_IVF_SCALED_ASSIGN_CTES = f"""iv AS (
+# The corpus-scaled routers' shared CTE prefix: integer vectors (iv),
+# the list count K from the data (kp) and the probe width np derived
+# from kp (npp) — both engines compute K and nprobe from the same
+# COUNT(*), so the operating point self-scales without a constant
+# anywhere. The scaled router then seeds from the salted md5 top-K and
+# routes by dot, like _IVF_ASSIGN_CTES; the trained router
+# (_lloyd_cte_chain) refines the same seeds first.
+_SCALED_K_CTES = f"""iv AS (
   SELECT vec_id,
          list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * {_IVF_SCALE}) AS BIGINT)) AS q,
-         list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
+                        x -> CAST(floor(CAST(x AS DOUBLE) * {_IVF_SCALE}) AS BIGINT)) AS q
   FROM embeddings
 ), kp AS (
   SELECT GREATEST({_IVF_SCALED_MIN_K},
@@ -2887,7 +2492,9 @@ _IVF_SCALED_ASSIGN_CTES = f"""iv AS (
                GREATEST({_IVF_SCALED_NPROBE_MIN},
                         CAST(CEIL(SQRT(CAST(k AS DOUBLE))) AS BIGINT))) AS np
   FROM kp
-), seedrank AS (
+)"""
+
+_IVF_SCALED_ASSIGN_CTES = f"""{_SCALED_K_CTES}, seedrank AS (
   SELECT vec_id, q,
          ROW_NUMBER() OVER (
            ORDER BY md5('{_IVF_SCALED_SALT}' || CAST(vec_id AS VARCHAR)), vec_id
@@ -2907,163 +2514,6 @@ _IVF_SCALED_ASSIGN_CTES = f"""iv AS (
 ), assigned AS (
   SELECT vec_id, c AS cluster FROM probe_rank WHERE pr = 1
 )"""
-
-# Scaled chain composed with the SAME HQ codebook CTEs as _IVFPQ_HQ_CHAIN
-# (pqe/hqseed/.../code verbatim — one codebook definition, two routers).
-_IVFPQ_SCALED_CHAIN = _ivfpq_hq_chain(
-    assign_ctes=_IVF_SCALED_ASSIGN_CTES,
-    probes_body="""SELECT vec_id AS q_id, c AS cluster
-  FROM probe_rank, npp WHERE pr <= npp.np""",
-)
-
-_IVFPQ_SCALED_ORACLE = f"""
-WITH {_IVFPQ_SCALED_CHAIN}
-SELECT vec_id, neighbor_id, adc_score, rk
-FROM ranked WHERE rk <= {_IVFPQ_TOP_K}
-ORDER BY vec_id, rk
-"""  # shared with q_sim_ivfpq_scaled_recall's composed oracle
-
-
-@register(
-    "q_sim_ivfpq_scaled_topk",
-    group="I",
-    oracle=_IVFPQ_SCALED_ORACLE,
-)
-def q_sim_ivfpq_scaled_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ at the CORPUS-SCALED operating point (VERDICT r13 task 1):
-    the same composed plan as q_sim_ivfpq_hq_topk — HQ codebooks, ADC
-    scoring, one cogroup on cluster id — routed through a coarse
-    quantizer whose list count scales with the corpus: K = max(16,
-    ceil(sqrt(N))), nprobe = clamp(ceil(sqrt(K)), 4, 16). Per-query
-    candidate work is nprobe * N/K ~ N^(3/4) — SUBLINEAR in corpus size,
-    where every fixed-K tier is linear (at sf1 this point probes ~3.4k
-    candidates/query vs the HQ point's ~12.5k, and the gap widens as
-    N^(3/4) vs N). Both engines derive K and nprobe from the SAME
-    count (parquet footers / COUNT(*)); seeds are salted md5 top-K, so
-    the differential oracle stays FULL at any corpus size."""
-    k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
-    nprobe = _ivf_scaled_nprobe(k)
-    return _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        nprobe,
-        _HQ_M,
-        _HQ_SUB,
-        _IVFPQ_TOP_K,
-        f"ivfpq_scaled_deep@k{k}p{nprobe}",
-        ivf_fn=ivf_scaled_index,
-        cache_depth=_HQ_RERANK_R,
-    )
-
-
-@register(
-    "q_sim_ivfpq_scaled_recall",
-    group="I",
-    oracle=f"""
-WITH ivfpq AS (
-  {_IVFPQ_SCALED_ORACLE}
-), base AS (
-  SELECT vec_id,
-         list_transform(embedding,
-             x -> CAST(FLOOR(CAST(x AS DOUBLE) * {_PQ_SCALE}) AS BIGINT)) AS piv
-  FROM embeddings
-), exact AS (
-  SELECT query_id, neighbor_id FROM (
-    SELECT q.vec_id AS query_id, x.vec_id AS neighbor_id,
-           ROW_NUMBER() OVER (
-             PARTITION BY q.vec_id
-             ORDER BY list_dot_product(q.piv, x.piv) DESC, x.vec_id ASC) AS rk
-    FROM base q JOIN base x ON q.vec_id <> x.vec_id
-  ) WHERE rk <= {_IVFPQ_TOP_K} AND {_recall_sample_sql("query_id")}
-), hits AS (
-  SELECT COUNT(*) AS n_hits
-  FROM ivfpq JOIN exact
-    ON ivfpq.vec_id = exact.query_id
-   AND ivfpq.neighbor_id = exact.neighbor_id
-), tot AS (
-  SELECT COUNT(*) AS n_truth, COUNT(DISTINCT query_id) AS n_queries FROM exact
-)
-SELECT CAST(n_queries AS BIGINT) AS n_queries,
-       CAST(n_truth AS BIGINT) AS n_truth,
-       CAST(n_hits AS BIGINT) AS n_hits,
-       CAST(n_hits * 10000 // n_truth AS BIGINT) AS recall_x10000
-FROM hits, tot
-""",
-)
-def q_sim_ivfpq_scaled_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@3 of the corpus-scaled composed point against the SAME
-    shared exact truth as every other composed instrument — the fourth
-    point on the operating curve, and the one that reads the PRICE of
-    quantizer scaling: the delta vs q_sim_ivfpq_hq_recall is what
-    sublinear candidate work costs in recall on this corpus (the
-    fixed-K point probes a constant 1/4 of the corpus; this point's
-    probed fraction shrinks as N^(-1/4)). Floor-pinned in
-    tests/test_operators_unit.py like the other instruments."""
-    sc = q_sim_ivfpq_scaled_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(sc, exact)
-
-
-_IVFPQ_SCALED_RERANK_ORACLE = _rerank_oracle(_IVFPQ_SCALED_CHAIN)
-
-
-@register(
-    "q_sim_ivfpq_scaled_rerank",
-    group="I",
-    oracle=_IVFPQ_SCALED_RERANK_ORACLE,
-)
-def q_sim_ivfpq_scaled_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-stage retrieval AT THE CORPUS-SCALED OPERATING POINT (VERDICT
-    r14 task 2) — the actual 100 TB production shape: K ~ sqrt(N)
-    routing bounds candidate work sublinearly (N^(3/4) per query), the
-    HQ ADC proposes a top-{_HQ_RERANK_R} shortlist in the compressed
-    domain, and an exact integer-dot refine over only those rows
-    re-ranks to the final top-{_IVFPQ_TOP_K}. The rerank previously
-    existed only on the fixed-K router (q_sim_ivfpq_hq_rerank), whose
-    linear probe work is exactly what the scaled router exists to
-    remove — this point composes the two fixes. Same parameterized
-    search (_ivfpq_search + ivf_scaled_index) and the same shared
-    refine stage (_exact_refine) as every other two-stage point; the
-    oracle composes the scaled CTE chain with the shared rerank
-    epilogue (_rerank_oracle) — one chain + one epilogue, zero drift.
-    Recall reads ≈ the scaled routing ceiling: the shortlist only has
-    to CONTAIN the true neighbors for the refine to surface them."""
-    k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
-    nprobe = _ivf_scaled_nprobe(k)
-    short = _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        nprobe,
-        _HQ_M,
-        _HQ_SUB,
-        _HQ_RERANK_R,
-        f"ivfpq_scaled_deep@k{k}p{nprobe}",
-        ivf_fn=ivf_scaled_index,
-        cache_depth=_HQ_RERANK_R,
-    ).select("vec_id", "neighbor_id")
-    return _exact_refine(spark, sf_dir, short)
-
-
-@register(
-    "q_sim_ivfpq_scaled_rerank_recall",
-    group="I",
-    oracle=_composed_recall_oracle(_IVFPQ_SCALED_RERANK_ORACLE),
-)
-def q_sim_ivfpq_scaled_rerank_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{_IVFPQ_TOP_K} of the scaled-routing + exact-refine point
-    against the SAME shared exact truth as every composed instrument —
-    the production point on the operating curve. What this number reads
-    is the scaled ROUTING ceiling alone (quantization loss is bought
-    back by the refine, exactly as the fixed-K rerank instrument reads
-    the nprobe-4 ceiling): the delta vs q_sim_ivfpq_hq_rerank_recall is
-    the recall price of sublinear candidate work, and the delta vs
-    q_sim_ivfpq_scaled_recall is the refine's buy-back at this routing.
-    Floor-pinned in tests/test_operators_unit.py."""
-    rr = q_sim_ivfpq_scaled_rerank(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(rr, exact)
 
 
 # --- TRAINED coarse quantizer (integer Lloyd refinement) ----------------
@@ -3106,24 +2556,10 @@ def _lloyd_cte_chain(iters: int) -> str:
     per-dim integer sums, and a portable floor-division mean (DuckDB's
     ``//`` truncates toward zero, numpy's floors — the CASE branch
     makes both floor), empty clusters keeping their centroid. Ends in
-    the ``probe_rank``/``assigned`` CTEs the shared _ivfpq_hq_chain
+    the ``probe_rank``/``assigned`` CTEs the shared _ivfpq_chain
     expects, ranked by ascending d2 under the final centroids."""
     ctes = [
-        f"""iv AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * {_IVF_SCALE}) AS BIGINT)) AS q
-  FROM embeddings
-), kp AS (
-  SELECT GREATEST({_IVF_SCALED_MIN_K},
-                  CAST(CEIL(SQRT(CAST(COUNT(*) AS DOUBLE))) AS BIGINT)) AS k
-  FROM embeddings
-), npp AS (
-  SELECT LEAST({_IVF_SCALED_PROBE_DEPTH},
-               GREATEST({_IVF_SCALED_NPROBE_MIN},
-                        CAST(CEIL(SQRT(CAST(k AS DOUBLE))) AS BIGINT))) AS np
-  FROM kp
-), dims AS (
+        f"""{_SCALED_K_CTES}, dims AS (
   SELECT unnest(generate_series(1, (SELECT MAX(len(q)) FROM iv))) AS dd
 ), seedrank AS (
   SELECT vec_id, q,
@@ -3261,7 +2697,7 @@ def _lloyd_refine(spark: SparkSession, e: DataFrame, cq0, iters: int):
 def ivf_trained_index(spark: SparkSession, sf_dir: str):
     """The TRAINED corpus-scaled quantizer's serving index: identical
     geometry to ivf_scaled_index (K = _ivf_scaled_k(N) lists, probe
-    ranking cut at depth {_IVF_SCALED_PROBE_DEPTH}) but with the md5
+    ranking cut at depth _IVF_SCALED_PROBE_DEPTH) but with the md5
     seed centroids refined by _IVF_TRAINED_ITERS exact-integer Lloyd
     passes, and assignment/probe ranking by ascending integer L2 — the
     metric the training minimizes. Same (assigned, cq) contract as
@@ -3290,129 +2726,266 @@ def ivf_trained_index(spark: SparkSession, sf_dir: str):
     return assigned, cq
 
 
-_IVFPQ_TRAINED_CHAIN = _ivfpq_hq_chain(
-    assign_ctes=_lloyd_cte_chain(_IVF_TRAINED_ITERS),
-    probes_body="""SELECT vec_id AS q_id, c AS cluster
-  FROM probe_rank, npp WHERE pr <= npp.np""",
+# --- The IVF-PQ operating points: one spec table, one registration loop -
+# Five points, each one router (fixed-K ivf_index, corpus-scaled
+# ivf_scaled_index, Lloyd-trained ivf_trained_index) crossed with one
+# codebook (pq_index 4×16, pq_hq_index 32×2, residual pq_res_index
+# 32×2). An IvfPqPoint names both halves, the query-time nprobe, the
+# session tier tag and the oracle's CTE chain; _register_point derives
+# every query of the point — topk and recall, plus rerank and
+# rerank_recall where the point has a rerank pair — Spark builder AND
+# DuckDB oracle from that one entry, so a point cannot drift from its
+# oracle (V-SMART-Join's split: one engine, pluggable measures). Queries
+# register in table order, each point's consecutively.
+def _fixed_probe(knob: Callable[[], int]) -> Callable[[str], tuple[str, int]]:
+    return lambda sf_dir: ("", knob())
+
+
+def _scaled_probe(sf_dir: str) -> tuple[str, int]:
+    k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
+    return f"k{k}", _ivf_scaled_nprobe(k)
+
+
+@dataclass(frozen=True)
+class IvfPqPoint:
+    """One composed operating point. ``probe`` maps sf_dir to (tier-tag
+    part, query-time nprobe); it runs each time a query is built, so the
+    nprobe env knobs steer tools/ivf_sweep.py, while ``chain`` (the
+    oracle's _ivfpq_chain) pins the shipped nprobe. A point with
+    ``rerank`` builds ONE _HQ_RERANK_R-deep tier that its topk (top-3
+    slice) and rerank (16-wide shortlist) share, so the cogroup scoring
+    runs once per point per session; the others build 3 deep. ``docs``:
+    why the point exists (topk), what its recall delta isolates, and —
+    with ``rerank`` — the rerank note and its recall delta."""
+
+    infix: str  # the point's query names are q_sim_ivfpq{infix}_<kind>
+    router: Callable
+    codebook: Callable
+    M: int
+    SUB: int
+    probe: Callable[[str], tuple[str, int]]
+    tier: str
+    chain: str
+    rerank: bool
+    docs: tuple[str, ...]
+
+    @property
+    def depth(self) -> int:
+        return _HQ_RERANK_R if self.rerank else _IVFPQ_TOP_K
+
+    def search(self, spark: SparkSession, sf_dir: str, top_k: int) -> DataFrame:
+        """The point's ADC top-``top_k`` (top_k <= depth) from its tier."""
+        kp, nprobe = self.probe(sf_dir)
+        return _ivfpq_search(
+            spark,
+            sf_dir,
+            self.codebook,
+            nprobe,
+            self.M,
+            self.SUB,
+            top_k,
+            f"{self.tier}@{kp}p{nprobe}",
+            ivf_fn=self.router,
+            cache_depth=self.depth,
+        )
+
+
+_SCALED_NPROBE_SQL = "(SELECT np FROM npp)"  # the oracle's derived nprobe
+
+_IVFPQ_POINTS = (
+    IvfPqPoint(
+        "", ivf_index, pq_index, _PQ_M, _PQ_SUB, _fixed_probe(_ivf_nprobe),
+        "ivfpq_topk", _ivfpq_chain("pq#", _PQ_K, _PQ_M, _PQ_SUB, _IVF_NPROBE),
+        rerank=False,
+        docs=(
+            "IVF-PQ composed ANN, the default point (the SIXTH similarity "
+            "tier): every vector probes its nearest inverted lists (the IVF "
+            "quantizer's integer-exact routing) and candidates are scored by "
+            "PQ asymmetric distance — per query one 4×16 lookup table of "
+            "subspace dots, per candidate 4 gathers on its one-byte codes "
+            "(64× compression). This is the composition production vector "
+            "search deploys: IVF bounds the candidate COUNT, PQ the candidate "
+            "BYTES, and both halves come off the serving indexes (ivf_index + "
+            "pq_index), so a loaded ANN store serves it with zero build kernels.",
+            "Composed losses show up TOGETHER here — routing loss (the true "
+            "neighbor's list was not probed) and quantization loss (ADC "
+            "misranked inside a probed list) — the number a deployment tunes "
+            "nprobe and the codebook against.",
+        ),
+    ),
+    IvfPqPoint(
+        "_hq", ivf_index, pq_hq_index, _HQ_M, _HQ_SUB, _fixed_probe(_hq_nprobe),
+        "ivfpq_hq_deep", _ivfpq_chain(),
+        rerank=True,
+        docs=(
+            "IVF-PQ at the HIGH-QUALITY point (VERDICT r12 task 4), the one a "
+            "deployment would serve: 32 subspaces × 2 dims, 256-entry seed "
+            f"codebooks (32 B/vector, 8× compression), nprobe {_HQ_NPROBE}. On "
+            "isotropic unit vectors (PQ's worst case) recall@3 is ~0.45-0.47 "
+            "at sf0.001/0.01/0.1, above the plain IVF tier's ~0.30-0.33, "
+            "because the wider probe more than buys back the quantization "
+            "loss; a candidate still costs 32 one-byte gathers, and the "
+            "32×256 int64 LUT (64 KB) is corpus-size independent.",
+            "The floor pin in tests/test_operators_unit.py keeps it at or "
+            "above the plain IVF tier's recall on the same split — the r12 "
+            "deployability bar.",
+            "Measured recall@3 0.469 → 0.516 at sf0.1: the nprobe-4 routing "
+            "ceiling, quantization loss fully bought back.",
+            "The third curve point (default ADC ~0.07, HQ ADC ~0.47, rerank "
+            "~0.52). What remains after the refine is pure ROUTING loss — the "
+            "signal to spend the next dollar on nprobe, not on the codebook. "
+            "Floor-pinned.",
+        ),
+    ),
+    IvfPqPoint(
+        "_residual", ivf_index, pq_res_index, _HQ_M, _HQ_SUB,
+        _fixed_probe(_hq_nprobe), "ivfpq_res_topk", _ivfpq_chain(residual=True),
+        rerank=False,
+        docs=(
+            "IVF-PQ with RESIDUAL encoding (VERDICT r14 task 3, IVFADC proper) "
+            "at the HQ cost envelope — same fixed-K router, nprobe, 32×256×2 "
+            "codebook budget and 32 B/vector — but codes quantize (vector − "
+            "coarse centroid) with a trained residual codebook, and ADC adds "
+            "the exact integer q·centroid term once per probed list.",
+            "Next to q_sim_ivfpq_hq_recall (raw encoding, all else equal) this "
+            "is the residual lever's lift, pinned >= in pytest; next to "
+            "q_sim_ivfpq_hq_rerank_recall (the nprobe-4 routing ceiling) it "
+            "reads how much of the quantization gap residual coding closes "
+            "WITHOUT the refine's random reads. Floor-pinned.",
+        ),
+    ),
+    IvfPqPoint(
+        "_scaled", ivf_scaled_index, pq_hq_index, _HQ_M, _HQ_SUB, _scaled_probe,
+        "ivfpq_scaled_deep",
+        _ivfpq_chain(nprobe=_SCALED_NPROBE_SQL, assign_ctes=_IVF_SCALED_ASSIGN_CTES),
+        rerank=True,
+        docs=(
+            "IVF-PQ at the CORPUS-SCALED point (VERDICT r13 task 1): HQ "
+            "codebooks routed by a quantizer whose list count grows with the "
+            "corpus, K = max(16, ceil(sqrt(N))), nprobe = clamp(ceil(sqrt(K)), "
+            "4, 16). Per-query candidate work nprobe·N/K ~ N^(3/4) is "
+            "SUBLINEAR where every fixed-K tier is linear (at sf1 ~3.4k "
+            "candidates per query vs the HQ point's ~12.5k). Both engines "
+            "derive K and nprobe from the same count (parquet footers / "
+            "COUNT(*)) and seed by salted md5 top-K, so the oracle stays FULL "
+            "at any corpus size.",
+            "It reads the PRICE of quantizer scaling: the delta vs "
+            "q_sim_ivfpq_hq_recall is what sublinear candidate work costs in "
+            "recall (the fixed-K point probes a constant 1/4 of the corpus; "
+            "this one's probed fraction shrinks as N^(-1/4)). Floor-pinned.",
+            "The 100 TB production shape (VERDICT r14 task 2): the refine ran "
+            "only on the fixed-K router, whose linear probe work the scaled "
+            "router exists to remove — this point composes the two fixes.",
+            "It reads the scaled ROUTING ceiling alone: the delta vs "
+            "q_sim_ivfpq_hq_rerank_recall is the recall price of sublinear "
+            "candidate work, the delta vs q_sim_ivfpq_scaled_recall the "
+            "refine's buy-back at this routing. Floor-pinned.",
+        ),
+    ),
+    IvfPqPoint(
+        "_trained", ivf_trained_index, pq_hq_index, _HQ_M, _HQ_SUB, _scaled_probe,
+        "ivfpq_trained_deep",
+        _ivfpq_chain(
+            nprobe=_SCALED_NPROBE_SQL,
+            assign_ctes=_lloyd_cte_chain(_IVF_TRAINED_ITERS),
+        ),
+        rerank=True,
+        docs=(
+            "IVF-PQ with a TRAINED coarse quantizer (VERDICT r14 task 1): the "
+            "corpus-scaled point (equal K, nprobe and HQ codebooks) with its "
+            f"md5 seed centroids refined by {_IVF_TRAINED_ITERS} deterministic "
+            "integer-exact Lloyd passes. Training raises the ROUTING quality "
+            "every composed tier is capped by — random seeds waste lists on "
+            "near-duplicate centroids and starve dense regions. The oracle's "
+            "Lloyd CTE chain replays every pass in exact integers (the "
+            "q_text_bpe_merges fixed-unroll discipline).",
+            "Against q_sim_ivfpq_scaled_recall this is the value of TRAINING "
+            "(same seeds; the only delta is the Lloyd passes; the trained >= "
+            "scaled pin is in pytest); against the rerank instruments it "
+            "splits the remaining gap into routing vs quantization. "
+            "Floor-pinned.",
+            "The full production composition and the highest-recall point the "
+            "engine ships: trained sublinear routing, compressed-domain "
+            "propose, exact refine, at the N^(3/4) per-query cost of every "
+            "scaled-K point.",
+            "The top of the operating curve and the direct read of the TRAINED "
+            "routing ceiling: the delta vs q_sim_ivfpq_scaled_rerank_recall is "
+            "training's lift on the ceiling itself. Floor-pinned.",
+        ),
+    ),
 )
 
-_IVFPQ_TRAINED_ORACLE = f"""
-WITH {_IVFPQ_TRAINED_CHAIN}
+_TOPK_DOC = (
+    " Plan (_ivfpq_search): the index side is (cluster, codes) only — the "
+    "embeddings are never read there; ONE cogroup on cluster id runs an "
+    "Arrow LUT-gather kernel per (query batch × inverted list) with per-list "
+    "top-k, then a global window re-rank. Integer end to end (exact int64 "
+    "ADC), so the oracle is FULL: the point's _ivfpq_chain cut at "
+    f"rk <= {_IVFPQ_TOP_K}."
+)
+_TRUTH_DOC = (
+    "the shared exact integer-dot truth (_ivfpq_exact_truth: md5-sampled "
+    "evaluation queries, same k, same objective for all eight composed "
+    "instruments, so their numbers are points on one operating curve; truth "
+    "cost ∝ |sample| × corpus, never quadratic)."
+)
+_RERANK_DOC = (
+    f"its ADC top-{_HQ_RERANK_R} shortlist (compressed-domain work) is "
+    f"re-ranked to the final top-{_IVFPQ_TOP_K} by an exact integer-dot "
+    "refine (_exact_refine: two thin equi-joins + a JVM fold dot, no Python, "
+    "R rows per query regardless of corpus size — at 100 TB the random-read "
+    "refine against the stored vector table). The shortlist only has to "
+    "CONTAIN the true neighbors for the refine to surface them. FULL oracle: "
+    "the point's chain + the shared _rerank_oracle epilogue."
+)
+
+
+def _register_point(p: IvfPqPoint) -> None:
+    """Register ``p``'s queries; builder and oracle both read ``p``."""
+    name = f"q_sim_ivfpq{p.infix}"
+
+    def topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+        return p.search(spark, sf_dir, _IVFPQ_TOP_K)
+
+    def rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
+        short = p.search(spark, sf_dir, _HQ_RERANK_R).select("vec_id", "neighbor_id")
+        return _exact_refine(spark, sf_dir, short)
+
+    def recall_of(tier_fn):
+        def recall(spark: SparkSession, sf_dir: str) -> DataFrame:
+            tier = tier_fn(spark, sf_dir).select("vec_id", "neighbor_id")
+            return _ann_recall_frame(tier, _ivfpq_exact_truth(spark, sf_dir))
+
+        return recall
+
+    def recall_doc(tier_name: str, why: str) -> str:
+        return f"Recall@{_IVFPQ_TOP_K} of {tier_name} against {_TRUTH_DOC} {why}"
+
+    topk_sql = f"""
+WITH {p.chain}
 SELECT vec_id, neighbor_id, adc_score, rk
 FROM ranked WHERE rk <= {_IVFPQ_TOP_K}
 ORDER BY vec_id, rk
 """
+    queries = [
+        ("topk", topk, topk_sql, p.docs[0] + _TOPK_DOC),
+        ("recall", recall_of(topk), _composed_recall_oracle(topk_sql),
+         recall_doc(f"{name}_topk", p.docs[1])),
+    ]
+    if p.rerank:
+        rerank_sql = _rerank_oracle(p.chain)
+        queries += [
+            ("rerank", rerank, rerank_sql,
+             f"Two-stage retrieval on {name}_topk's tier: {_RERANK_DOC} {p.docs[2]}"),
+            ("rerank_recall", recall_of(rerank), _composed_recall_oracle(rerank_sql),
+             recall_doc(f"{name}_rerank", p.docs[3])),
+        ]
+    for kind, fn, oracle, doc in queries:
+        register(f"{name}_{kind}", group="I", oracle=oracle, doc=doc)(fn)
 
 
-@register(
-    "q_sim_ivfpq_trained_topk",
-    group="I",
-    oracle=_IVFPQ_TRAINED_ORACLE,
-)
-def q_sim_ivfpq_trained_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-PQ with a TRAINED coarse quantizer (VERDICT r14 task 1 — the
-    round's top task): the corpus-scaled operating point (equal K,
-    equal nprobe, same HQ codebooks and ADC scoring) with the md5 seed
-    centroids refined by {_IVF_TRAINED_ITERS} deterministic
-    integer-exact Lloyd iterations. Training raises the ROUTING quality
-    every composed tier is capped by — random seeds waste lists on
-    near-duplicate centroids and starve dense regions; two Lloyd passes
-    spread them toward the data's actual cluster structure. The recall
-    delta vs q_sim_ivfpq_scaled_topk (same seeds, zero iterations)
-    isolates pure training gain, pinned >= 0 in pytest. FULL oracle:
-    the Lloyd CTE chain replays both refinement iterations in exact
-    integer arithmetic (the q_text_bpe_merges fixed-unroll discipline)
-    and feeds the shared HQ codebook/ADC chain."""
-    k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
-    nprobe = _ivf_scaled_nprobe(k)
-    return _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        nprobe,
-        _HQ_M,
-        _HQ_SUB,
-        _IVFPQ_TOP_K,
-        f"ivfpq_trained_deep@k{k}p{nprobe}",
-        ivf_fn=ivf_trained_index,
-        cache_depth=_HQ_RERANK_R,
-    )
-
-
-@register(
-    "q_sim_ivfpq_trained_recall",
-    group="I",
-    oracle=_composed_recall_oracle(_IVFPQ_TRAINED_ORACLE),
-)
-def q_sim_ivfpq_trained_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Recall@{_IVFPQ_TOP_K} of the trained-quantizer composed point
-    against the SAME shared exact truth as every other instrument. Read
-    against q_sim_ivfpq_scaled_recall this is the value of TRAINING
-    (equal K/nprobe/codebooks — the only delta is two Lloyd passes);
-    read against the rerank instruments it says how much of the
-    remaining gap is routing vs quantization. Floor-pinned, plus the
-    relative trained >= scaled pin in tests/test_operators_unit.py."""
-    tr = q_sim_ivfpq_trained_topk(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(tr, exact)
-
-
-_IVFPQ_TRAINED_RERANK_ORACLE = _rerank_oracle(_IVFPQ_TRAINED_CHAIN)
-
-
-@register(
-    "q_sim_ivfpq_trained_rerank",
-    group="I",
-    oracle=_IVFPQ_TRAINED_RERANK_ORACLE,
-)
-def q_sim_ivfpq_trained_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The full production composition — trained sublinear routing +
-    compressed-domain propose + exact refine: the corpus-scaled K with
-    Lloyd-trained centroids routes, the HQ ADC proposes a
-    top-{_HQ_RERANK_R} shortlist, the exact integer-dot refine
-    re-ranks. This is the highest-recall operating point the engine
-    ships (its recall instrument reads the TRAINED routing ceiling —
-    the number training bought), at the same N^(3/4) per-query cost
-    envelope as every scaled-K point. All three stages are the shared
-    parameterized pieces (_ivfpq_search + ivf_trained_index +
-    _exact_refine); the oracle is the Lloyd chain + the shared rerank
-    epilogue."""
-    k = _ivf_scaled_k(_parquet_row_count(sf_dir, "embeddings"))
-    nprobe = _ivf_scaled_nprobe(k)
-    short = _ivfpq_search(
-        spark,
-        sf_dir,
-        pq_hq_index,
-        nprobe,
-        _HQ_M,
-        _HQ_SUB,
-        _HQ_RERANK_R,
-        f"ivfpq_trained_deep@k{k}p{nprobe}",
-        ivf_fn=ivf_trained_index,
-        cache_depth=_HQ_RERANK_R,
-    ).select("vec_id", "neighbor_id")
-    return _exact_refine(spark, sf_dir, short)
-
-
-@register(
-    "q_sim_ivfpq_trained_rerank_recall",
-    group="I",
-    oracle=_composed_recall_oracle(_IVFPQ_TRAINED_RERANK_ORACLE),
-)
-def q_sim_ivfpq_trained_rerank_recall(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """Recall@{_IVFPQ_TOP_K} of the trained-routing + exact-refine
-    composition against the shared exact truth — the top of the
-    engine's operating curve and the direct read of the TRAINED routing
-    ceiling (quantization loss refined away; what remains is purely
-    which lists were probed). The delta vs
-    q_sim_ivfpq_scaled_rerank_recall is training's lift on the ceiling
-    itself — the r14 verdict's 'the one number a production retrieval
-    user would reject' metric, moved. Floor-pinned."""
-    rr = q_sim_ivfpq_trained_rerank(spark, sf_dir).select("vec_id", "neighbor_id")
-    exact = _ivfpq_exact_truth(spark, sf_dir)
-    return _ann_recall_frame(rr, exact)
+for _point in _IVFPQ_POINTS:
+    _register_point(_point)
 
 
 # --- Filtered (hybrid) ANN search ---------------------------------------
@@ -3431,7 +3004,7 @@ _FILTER_CAND_PRED = (
     "\n    AND a.vec_id IN "
     f"(SELECT vec_id FROM embeddings WHERE {_FILTER_PRED_SQL})"
 )
-_IVFPQ_FILTERED_CHAIN = _ivfpq_hq_chain(cand_pred=_FILTER_CAND_PRED)
+_IVFPQ_FILTERED_CHAIN = _ivfpq_chain(cand_pred=_FILTER_CAND_PRED)
 
 
 def _filter_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -4931,7 +4504,7 @@ ORDER BY label, rk
 )
 def q_sim_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding outlier detection — the curation pass that surfaces
-    mislabeled/corrupted vectors: per label, the {_OUT_TOP_K} vectors
+    mislabeled/corrupted vectors: per label, the _OUT_TOP_K (3) vectors
     farthest from their label's centroid. Distance is computed against
     the UNNORMALIZED integer centroid — Σ_d (x_d·n − Σx_d)², i.e. n²
     times the distance to the mean — so the ranking is identical to the

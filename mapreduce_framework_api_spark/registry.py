@@ -80,67 +80,67 @@ _LOADED = False
 # the suite is green at the round boundary too — the structural
 # cross-boundary red of rounds 7-8 is gone by construction.
 #
-# Round-16 window, by the standing policy (rotate-first commit):
-# (3) staleness retirement — the 50 stalest receipts at the round-15
-# boundary, recomputed from CORRECTNESS_r*.json: the 9 remaining r11-era
-# rows displaced by round-15's saturation swap (q_pipe_split_assign,
-# q_pipe_split_by_cluster, q_text_fingerprint, q_text_repetition,
-# q_text_surprisal, q_text_tokens, q_text_zipf, q_win_range_frame,
-# q_win_topk_group) plus the alphabetically-first 41 of the r12-receipt
-# block (ties at equal staleness are allowed by test_window_policy's
-# clause (c); alphabetical keeps the choice deterministic). No query is
-# receipt-less this round (clause (1) vacuous).
+# Round-17 window, by the standing policy, recomputed from
+# CORRECTNESS_r*.json (no query is receipt-less, so clause (1) is vacuous):
+# (3) the 5 r12-receipt rows (q_win_first_last, q_win_lag_lead,
+# q_win_ntile_dist, q_win_rank, q_win_running); the 8 r13-receipt rows
+# whose code the IVF-PQ spec table or the r16 round changed (the 5 r13
+# q_sim_ivfpq_* cells and q_sim_{pq,ivf,lsh}_recall); (2) the 16 fresher
+# rows declared in _WINDOW_CHANGED_CODE below; (3) the alphabetically
+# first 21 of the remaining r13-receipt block (ties at equal staleness are
+# allowed by test_window_policy's clause (c); alphabetical keeps the
+# choice deterministic).
 _WINDOW: tuple[str, ...] = (
-    "q_agg_corr_exact",
-    "q_agg_mad",
-    "q_agg_rollup_reuse",
-    "q_agg_string_agg",
-    "q_agg_unpivot",
-    "q_agg_weighted_median",
-    "q_agg_winsorized",
-    "q_dedup_canonical",
-    "q_dedup_containment_bk",
-    "q_dedup_containment_bk_recall",
-    "q_dedup_embedding",
-    "q_dedup_minhash_recall",
-    "q_dedup_minhash_verified",
-    "q_dedup_semdedup_recall",
-    "q_dedup_simhash",
-    "q_dedup_simhash_recall",
-    "q_graph_components",
-    "q_limit_offset",
-    "q_pipe_mixture",
-    "q_pipe_split_assign",
-    "q_pipe_split_by_cluster",
-    "q_privacy_ldiversity",
-    "q_scan_project",
-    "q_set_ops",
-    "q_sim_maxsim_topk",
-    "q_sketch_bloom",
-    "q_sketch_cms",
-    "q_sketch_hll",
-    "q_sort_multi",
-    "q_stream_attrib",
-    "q_stream_late",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_tumbling",
-    "q_subquery_corr_agg",
-    "q_subquery_exists",
-    "q_subquery_scalar",
-    "q_text_fingerprint",
-    "q_text_langid",
-    "q_text_ngrams",
-    "q_text_quality",
-    "q_text_repetition",
-    "q_text_surprisal",
-    "q_text_tfidf",
-    "q_text_tokens",
-    "q_text_wordcount",
-    "q_text_wordcount_rdd",
-    "q_text_zipf",
-    "q_win_range_frame",
-    "q_win_topk_group",
+    "q_agg_percentile",
+    "q_agg_stats",
+    "q_dedup_clusters",
+    "q_dedup_containment_bk_precision",
+    "q_dedup_containment_bk_verified",
+    "q_dedup_containment_est_recall",
+    "q_dedup_decontaminate",
+    "q_dedup_incremental",
+    "q_dedup_minhash",
+    "q_dedup_semdedup_recall_planted",
+    "q_events_anomaly",
+    "q_events_autocorr",
+    "q_events_burst",
+    "q_events_cdc_compact",
+    "q_events_cooccurrence",
+    "q_events_latency_bands",
+    "q_events_ohlc",
+    "q_events_rfm",
+    "q_events_sessionize",
+    "q_events_streaks",
+    "q_events_timeweighted",
+    "q_events_transitions",
+    "q_fn_map",
+    "q_graph_pagerank",
+    "q_sim_index_append_audit",
+    "q_sim_index_health",
+    "q_sim_ivf_recall",
+    "q_sim_ivfpq_hq_recall",
+    "q_sim_ivfpq_hq_rerank",
+    "q_sim_ivfpq_hq_rerank_recall",
+    "q_sim_ivfpq_hq_topk",
+    "q_sim_ivfpq_recall",
+    "q_sim_ivfpq_residual_recall",
+    "q_sim_ivfpq_residual_topk",
+    "q_sim_ivfpq_scaled_recall",
+    "q_sim_ivfpq_scaled_rerank",
+    "q_sim_ivfpq_scaled_rerank_recall",
+    "q_sim_ivfpq_scaled_topk",
+    "q_sim_ivfpq_topk",
+    "q_sim_ivfpq_trained_recall",
+    "q_sim_ivfpq_trained_rerank",
+    "q_sim_ivfpq_trained_rerank_recall",
+    "q_sim_ivfpq_trained_topk",
+    "q_sim_lsh_recall",
+    "q_sim_pq_recall",
+    "q_win_first_last",
+    "q_win_lag_lead",
+    "q_win_ntile_dist",
+    "q_win_rank",
+    "q_win_running",
 )
 
 # Policy clause (2) declarations: window slots occupied by queries whose
@@ -149,11 +149,30 @@ _WINDOW: tuple[str, ...] = (
 # lane). test_window_policy exempts exactly these named slots from its
 # stalest-first structural assertion; an undeclared fresh receipt in the
 # window still fails, so clause (2) stays an explicit, reviewable claim
-# rather than a loophole (r15 self-review). Empty this round: every r15
-# code change shipped as a NEW query, and the refactored shared paths
-# (kernel unification) are covered by the new queries' driver slots plus
-# the local 203/203 oracle run.
-_WINDOW_CHANGED_CODE: tuple[str, ...] = ()
+# rather than a loophole (r15 self-review). This round: the 11
+# spec-generated q_sim_ivfpq_* cells holding r14/r15 receipts (every
+# builder and oracle of theirs is now generated from the IvfPqPoint
+# table), plus the five r16-changed cells no r16 slot re-verified
+# (q_sim_index_health, q_sim_index_append_audit, q_graph_pagerank,
+# q_dedup_containment_est_recall, q_dedup_semdedup_recall_planted).
+_WINDOW_CHANGED_CODE: tuple[str, ...] = (
+    "q_dedup_containment_est_recall",
+    "q_dedup_semdedup_recall_planted",
+    "q_graph_pagerank",
+    "q_sim_index_append_audit",
+    "q_sim_index_health",
+    "q_sim_ivfpq_hq_topk",
+    "q_sim_ivfpq_residual_recall",
+    "q_sim_ivfpq_residual_topk",
+    "q_sim_ivfpq_scaled_recall",
+    "q_sim_ivfpq_scaled_rerank",
+    "q_sim_ivfpq_scaled_rerank_recall",
+    "q_sim_ivfpq_scaled_topk",
+    "q_sim_ivfpq_trained_recall",
+    "q_sim_ivfpq_trained_rerank",
+    "q_sim_ivfpq_trained_rerank_recall",
+    "q_sim_ivfpq_trained_topk",
+)
 
 
 def load_all_queries() -> dict[str, Query]:

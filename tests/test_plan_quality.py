@@ -21,6 +21,7 @@ from mapreduce_framework_api_spark.plans.inspect import (
     scans_python_udf,
     simple_plan,
 )
+from mapreduce_framework_api_spark.operators.similarity import _IVFPQ_POINTS
 from mapreduce_framework_api_spark.registry import load_all_queries
 
 
@@ -243,3 +244,27 @@ def test_containment_est_joins_sizes_not_arrays(spark, queries):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         clear_session_caches()
+
+
+@pytest.mark.parametrize(
+    "point", _IVFPQ_POINTS, ids=lambda p: f"q_sim_ivfpq{p.infix}"
+)
+def test_ivfpq_candidate_pairs_are_unique(spark, point):
+    """_ivfpq_search ranks its candidates with no dropDuplicates because a
+    (vec_id, neighbor_id) pair is unique by construction: every index
+    vector sits in exactly one cluster (the cogroup key) and a query's
+    probe slice holds distinct cluster ids, so at most one cogroup block
+    proposes a pair. A duplicate would fill two ranks of one query's
+    top-k, so each operating point's deepest tier must hold every pair
+    exactly once."""
+    from pyspark.sql import functions as F
+
+    row = (
+        point.search(spark, SF_DIR, point.depth)
+        .agg(
+            F.count("*").alias("n"),
+            F.count_distinct("vec_id", "neighbor_id").alias("n_distinct"),
+        )
+        .first()
+    )
+    assert row["n"] > 0 and row["n"] == row["n_distinct"], row

@@ -64,6 +64,19 @@ def test_every_oracle_has_matching_registration(spark):
         assert q.oracle is None or q.oracle.strip(), f"{name}: empty oracle"
 
 
+def test_query_docs_have_no_raw_placeholders():
+    """A docstring is not an f-string: ``{_NAME}`` inside one reaches
+    Query.doc verbatim instead of the constant's value."""
+    import re
+
+    raw = {
+        name: re.findall(r"\{_[A-Z_]+\}", q.doc)
+        for name, q in QUERIES.items()
+        if re.search(r"\{_[A-Z_]+\}", q.doc)
+    }
+    assert not raw, f"unformatted placeholders in Query.doc: {raw}"
+
+
 def test_window_policy():
     """The external-verification window rotation (registry._WINDOW) is
     asserted, not just documented: (a) exactly 50 well-formed slots;
