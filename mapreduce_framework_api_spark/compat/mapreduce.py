@@ -82,31 +82,35 @@ class MapReduceJob:
         mapper = (
             combined_mapper(self.map_fn, self.reduce_fn) if self.combine else self.map_fn
         )
-        self._rdd = (
-            lines.mapPartitionsWithIndex(mapper)
-            .reduceByKey(self.reduce_fn, numPartitions=self.partitions)
-            .sortByKey()  # the reference's BST in-order contract (print_tree)
+        # No sortByKey here: its range partitioner samples the input with
+        # a job, which would make start() eager. The collecting sinks sort
+        # on the driver instead (result).
+        self._rdd = lines.mapPartitionsWithIndex(mapper).reduceByKey(
+            self.reduce_fn, numPartitions=self.partitions
         )
         return self
 
     # -- mr_finish: run, optionally sink, report elapsed ------------------
     def result(self) -> list[tuple[Any, Any]]:
+        """Every (key, value) pair in ascending key order: the reference's
+        BST in-order contract (``print_tree``). The keys are unique after
+        the reduce, and Python's order on them is the order sortByKey
+        uses (for ``str`` keys, UTF-8 byte order)."""
         if self._rdd is None:
             raise RuntimeError("call start() first")
-        return self._rdd.collect()
+        return sorted(self._rdd.collect(), key=lambda kv: kv[0])
 
     def finish(self, outpath: str | None = None, fmt: str = "{0}, {1}\n") -> float:
         """Run the job; write ``fmt``-formatted lines if ``outpath`` given
         (the reference's ``dprintf(outfd, "%s, %d\\n", ...)`` sink,
         ``print_tree+0x3a``); return elapsed seconds (the reference prints
         ``Time = %f`` µs, ``mapreduce.c:224``)."""
-        if self._rdd is None:
-            raise RuntimeError("call start() first")
         if outpath is not None:
-            rows = self._rdd.map(lambda kv: fmt.format(kv[0], kv[1]).rstrip("\n")).collect()
             with open(outpath, "w") as f:
-                for r in rows:
-                    f.write(r + "\n")
+                for k, v in self.result():
+                    f.write(fmt.format(k, v).rstrip("\n") + "\n")
+        elif self._rdd is None:
+            raise RuntimeError("call start() first")
         else:
             self._rdd.count()
         return time.perf_counter() - (self._t0 or time.perf_counter())

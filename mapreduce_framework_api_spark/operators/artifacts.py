@@ -21,11 +21,21 @@ the in-memory memo's fingerprinted keys) and seeds the session memo
 every registered query downstream of one — transparently serves from
 disk. No query code changes: the memo is the seam.
 
-Scale shape: writes are one job per artifact (the build plans already
-exist; parquet adds columnar compression — the shingle arrays are the
-only corpus-scale artifact, the rest are thin). Loads are lazy parquet
-scans: nothing is read until a consumer's plan executes, and column
-pruning applies (a consumer projecting only ``n`` never reads ``harr``).
+Scale shape: a persist runs its store's builders on a driver-side pool
+of ``defaultParallelism`` threads (``_persist_frames``), and each pool
+task writes its builder's frames as soon as they are built while the
+other builds go on; Spark overlaps the scheduling latency of jobs
+submitted from several threads. Builders that share a prerequisite
+build it once (the session memo is single-flight). Every pool job keeps
+the caller's job group. A frame's manifest row count is summed from the
+footers of the part files just written, so no job re-reads the store.
+If a build or a write fails, calls not yet started are cancelled, the
+running ones are waited for, and the first exception is raised inside
+the writer guard: no write outlives the lock, and no manifest is
+written. Loads are lazy parquet scans, opened on the same kind of pool
+(each open infers the schema from a footer); nothing is read until a
+consumer's plan executes, and column pruning applies (a consumer
+projecting only ``n`` never reads ``harr``).
 
 Three stores share the pattern: the dedup kernel artifacts
 (``persist_dedup_artifacts``), the incremental-ingest probe indexes
@@ -38,18 +48,81 @@ every load validates the source-table fingerprint before seeding the memo.
 from __future__ import annotations
 
 import contextlib
+import functools
 import json
 import os
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from mapreduce_framework_api_spark.sources.readers import (
     fixture_fingerprint,
+    parquet_rows,
     seed_artifact,
 )
 
 _MANIFEST = "manifest.json"
+
+
+def _concurrently(spark: SparkSession, calls) -> list:
+    """Run ``calls`` on a driver-side pool of ``defaultParallelism``
+    threads and return their results in order. Each call is wrapped by
+    ``inheritable_thread_target``, so the Spark jobs it fires carry the
+    caller's job group and local properties. If a call raises, calls not
+    yet started are cancelled and running ones are waited for before the
+    first exception is raised: nothing submitted here outlives this
+    function."""
+    wrap = inheritable_thread_target(spark)
+    pool = ThreadPoolExecutor(max_workers=spark.sparkContext.defaultParallelism)
+    try:
+        futures = [pool.submit(wrap(call)) for call in calls]
+        done, _ = wait(futures, return_when=FIRST_EXCEPTION)
+    finally:
+        pool.shutdown(wait=True, cancel_futures=True)
+    for f in futures:
+        if f in done and f.exception() is not None:
+            raise f.exception()
+    return [f.result() for f in futures]
+
+
+def _persist_frames(spark: SparkSession, sf_dir: str, out_dir: str, specs):
+    """Build and write one store's frames concurrently. ``specs`` holds
+    ``(builder, names)`` pairs; each pool task runs ``builder(spark,
+    sf_dir)`` and writes the result's frames to ``out_dir/<name>`` — the
+    result itself for one name, else the leading elements of the result
+    tuple, one per name (a None frame is not stored). Returns (each
+    builder's result, {name: row count}) in ``specs`` order."""
+
+    def build_and_write(builder, names):
+        out = builder(spark, sf_dir)
+        parts = out if isinstance(out, tuple) else (out,)
+        rows = {}
+        for name, df in zip(names, parts):
+            if df is not None:
+                path = os.path.join(out_dir, name)
+                df.write.mode("overwrite").parquet(path)
+                rows[name] = parquet_rows(path)
+        return out, rows
+
+    done = _concurrently(
+        spark, [functools.partial(build_and_write, b, names) for b, names in specs]
+    )
+    counts = {}
+    for _, rows in done:
+        counts.update(rows)
+    return [out for out, _ in done], counts
+
+
+def _read_frames(spark: SparkSession, out_dir: str, names) -> dict:
+    """{name: lazy parquet scan of ``out_dir/<name>``}, opened on the
+    pool."""
+    paths = [os.path.join(out_dir, n) for n in names]
+    frames = _concurrently(
+        spark, [functools.partial(spark.read.parquet, p) for p in paths]
+    )
+    return dict(zip(names, frames))
 
 
 def _write_manifest(out_dir: str, name: str, manifest: dict) -> None:
@@ -135,12 +208,8 @@ def persist_dedup_artifacts(
     Returns {name: row_count} for the ingest log."""
     os.makedirs(out_dir, exist_ok=True)
     with _writer_guard(out_dir, _MANIFEST):
-        counts = {}
-        for name, builder in _artifact_specs().items():
-            df = builder(spark, sf_dir)
-            path = os.path.join(out_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = spark.read.parquet(path).count()
+        specs = [(b, (name,)) for name, b in _artifact_specs().items()]
+        _, counts = _persist_frames(spark, sf_dir, out_dir, specs)
         manifest = {
             "sf_dir": os.path.abspath(sf_dir),
             "documents_fingerprint": fixture_fingerprint(sf_dir, "documents"),
@@ -166,9 +235,9 @@ def load_dedup_artifacts(spark: SparkSession, sf_dir: str, out_dir: str) -> dict
             f"documents table than {sf_dir} (fingerprint mismatch); "
             f"re-run persist_dedup_artifacts"
         )
-    for name, builder in _artifact_specs().items():
-        df = spark.read.parquet(os.path.join(out_dir, name))
-        seed_artifact(builder, spark, sf_dir, df)
+    specs = _artifact_specs()
+    for name, df in _read_frames(spark, out_dir, specs).items():
+        seed_artifact(specs[name], spark, sf_dir, df)
     return dict(manifest["rows"])
 
 
@@ -202,23 +271,18 @@ def persist_ingest_indexes(
 
     os.makedirs(out_dir, exist_ok=True)
     with _writer_guard(out_dir, _IDX_MANIFEST):
-        frames = {}
-        bands, sigs, sizes = dedup.incremental_corpus_index(spark, sf_dir)
-        frames.update(
-            minhash_bands=bands, minhash_sigs=sigs, minhash_sizes=sizes
+        specs = (
+            (
+                dedup.incremental_corpus_index,
+                ("minhash_bands", "minhash_sigs", "minhash_sizes"),
+            ),
+            # the second element, the text lookup, is not stored
+            (dedup.prefix_corpus_index, ("prefix_head_idx",)),
+            (dedup.bk_corpus_index, ("bk_value_idx", "bk_corpus_sk")),
+            (similarity.semdedup_corpus_index, ("sem_index",)),
         )
-        head_idx, _lookup = dedup.prefix_corpus_index(spark, sf_dir)
-        frames["prefix_head_idx"] = head_idx
-        value_idx, corpus_sk = dedup.bk_corpus_index(spark, sf_dir)
-        frames.update(bk_value_idx=value_idx, bk_corpus_sk=corpus_sk)
-        sem_index, cent = similarity.semdedup_corpus_index(spark, sf_dir)
-        frames["sem_index"] = sem_index
-
-        counts = {}
-        for name, df in frames.items():
-            path = os.path.join(out_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = spark.read.parquet(path).count()
+        outs, counts = _persist_frames(spark, sf_dir, out_dir, specs)
+        cent = outs[-1][1]
         manifest = {
             "sf_dir": os.path.abspath(sf_dir),
             "documents_fingerprint": fixture_fingerprint(sf_dir, "documents"),
@@ -253,31 +317,29 @@ def load_ingest_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
                 f"mismatch); re-run persist_ingest_indexes"
             )
 
-    def rd(name):
-        return spark.read.parquet(os.path.join(out_dir, name))
-
+    rd = _read_frames(spark, out_dir, manifest["rows"])
     seed_artifact(
         dedup.incremental_corpus_index,
         spark,
         sf_dir,
-        (rd("minhash_bands"), rd("minhash_sigs"), rd("minhash_sizes")),
+        (rd["minhash_bands"], rd["minhash_sigs"], rd["minhash_sizes"]),
     )
     lookup = dedup._prefix_corpus_frame(spark, sf_dir).select(
         F.col("doc_id").alias("corpus_id"), F.col("text").alias("corpus_text")
     )
     seed_artifact(
-        dedup.prefix_corpus_index, spark, sf_dir, (rd("prefix_head_idx"), lookup)
+        dedup.prefix_corpus_index, spark, sf_dir, (rd["prefix_head_idx"], lookup)
     )
     seed_artifact(
         dedup.bk_corpus_index,
         spark,
         sf_dir,
-        (rd("bk_value_idx"), rd("bk_corpus_sk")),
+        (rd["bk_value_idx"], rd["bk_corpus_sk"]),
     )
     cent = manifest["sem_centroids"]
     cent = None if cent is None else np.array(cent, dtype=np.int64)
     seed_artifact(
-        similarity.semdedup_corpus_index, spark, sf_dir, (rd("sem_index"), cent)
+        similarity.semdedup_corpus_index, spark, sf_dir, (rd["sem_index"], cent)
     )
     return dict(manifest["rows"])
 
@@ -345,53 +407,35 @@ def persist_ann_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         for entry in os.listdir(out_dir):
             if entry.endswith((".__compacting", ".__rebanding", ".__retraining")):
                 shutil.rmtree(os.path.join(out_dir, entry), ignore_errors=True)
-        frames = {"vec_norms": similarity.vec_norm_table(spark, sf_dir)}
-        lsh = similarity.lsh_code_table(spark, sf_dir)
-        if lsh is not None:
-            frames["lsh_codes"] = lsh
-        ivf = similarity.ivf_index(spark, sf_dir)
-        cq = None
-        if ivf is not None:
-            frames["ivf_assigned"], cq = ivf
-        pq = similarity.pq_index(spark, sf_dir)
-        cbook = None
-        if pq is not None:
-            frames["pq_codes"], cbook = pq
-        pq_hq = similarity.pq_hq_index(spark, sf_dir)
-        hq_cbook = None
-        if pq_hq is not None:
-            frames["pq_hq_codes"], hq_cbook = pq_hq
-        ivf_s = similarity.ivf_scaled_index(spark, sf_dir)
-        s_cq = None
-        if ivf_s is not None:
-            frames["ivf_scaled_assigned"], s_cq = ivf_s
-        ivf_t = similarity.ivf_trained_index(spark, sf_dir)
-        t_cq = None
-        if ivf_t is not None:
-            frames["ivf_trained_assigned"], t_cq = ivf_t
-        pq_r = similarity.pq_res_index(spark, sf_dir)
-        r_cbook = r_cpq = None
-        if pq_r is not None:
-            frames["pq_res_codes"], r_cbook, r_cpq = pq_r
-        frames["maxsim_tokens"] = similarity.maxsim_token_table(spark, sf_dir)
+        specs = (
+            (similarity.vec_norm_table, ("vec_norms",)),
+            (similarity.lsh_code_table, ("lsh_codes",)),
+            (similarity.ivf_index, ("ivf_assigned",)),
+            (similarity.pq_index, ("pq_codes",)),
+            (similarity.pq_hq_index, ("pq_hq_codes",)),
+            (similarity.ivf_scaled_index, ("ivf_scaled_assigned",)),
+            (similarity.ivf_trained_index, ("ivf_trained_assigned",)),
+            (similarity.pq_res_index, ("pq_res_codes",)),
+            (similarity.maxsim_token_table, ("maxsim_tokens",)),
+            (similarity._lsh_geometry, ()),
+        )
+        outs, counts = _persist_frames(spark, sf_dir, out_dir, specs)
+        _, _, ivf, pq, pq_hq, ivf_s, ivf_t, pq_r, _, geom = outs
 
-        counts = {}
-        for name, df in frames.items():
-            path = os.path.join(out_dir, name)
-            df.write.mode("overwrite").parquet(path)
-            counts[name] = spark.read.parquet(path).count()
-        geom = similarity._lsh_geometry(spark, sf_dir)
+        def mat(out, i):
+            return None if out is None else out[i].tolist()
+
         manifest = {
             "sf_dir": os.path.abspath(sf_dir),
             "embeddings_fingerprint": fixture_fingerprint(sf_dir, "embeddings"),
             "lsh_geometry": None if geom is None else list(geom),
-            "ivf_centroids": None if cq is None else cq.tolist(),
-            "ivf_scaled_centroids": None if s_cq is None else s_cq.tolist(),
-            "ivf_trained_centroids": None if t_cq is None else t_cq.tolist(),
-            "pq_codebook": None if cbook is None else cbook.tolist(),
-            "pq_hq_codebook": None if hq_cbook is None else hq_cbook.tolist(),
-            "pq_res_codebook": None if r_cbook is None else r_cbook.tolist(),
-            "pq_res_cpq": None if r_cpq is None else r_cpq.tolist(),
+            "ivf_centroids": mat(ivf, 1),
+            "ivf_scaled_centroids": mat(ivf_s, 1),
+            "ivf_trained_centroids": mat(ivf_t, 1),
+            "pq_codebook": mat(pq, 1),
+            "pq_hq_codebook": mat(pq_hq, 1),
+            "pq_res_codebook": mat(pq_r, 1),
+            "pq_res_cpq": mat(pq_r, 2),
             "rows": counts,
         }
         _write_manifest(out_dir, _ANN_MANIFEST, manifest)
@@ -872,16 +916,19 @@ def load_ann_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
     # read, so between a tombstone and its compaction every tier serves
     # exactly the survivor set. The tombstone side is broadcast — at any
     # realistic pending-set size the join adds no shuffle to any plan.
+    rows = dict(manifest["rows"])
+    pending = manifest.get("pending_tombstones", 0) > 0
+    scans = _read_frames(
+        spark, out_dir, list(rows) + ([_TOMBSTONES] if pending else [])
+    )
     tomb = None
-    if manifest.get("pending_tombstones", 0) > 0:
+    if pending:
         from pyspark.sql.functions import broadcast
 
-        tomb = broadcast(
-            spark.read.parquet(os.path.join(out_dir, _TOMBSTONES))
-        )
+        tomb = broadcast(scans[_TOMBSTONES])
 
     def rd(name):
-        df = spark.read.parquet(os.path.join(out_dir, name))
+        df = scans[name]
         return df if tomb is None else df.join(tomb, "vec_id", "left_anti")
 
     # The stored geometry must match what the serving session would derive
@@ -928,7 +975,6 @@ def load_ann_indexes(spark: SparkSession, sf_dir: str, out_dir: str) -> dict:
         return np.array(x, dtype=np.int64)
 
     seed(similarity.vec_norm_table, rd("vec_norms"))
-    rows = dict(manifest["rows"])
     seed(similarity.lsh_code_table, rd("lsh_codes") if "lsh_codes" in rows else None)
     cq = manifest["ivf_centroids"]
     seed(similarity.ivf_index, None if cq is None else (rd("ivf_assigned"), mat(cq)))

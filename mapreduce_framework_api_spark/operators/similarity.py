@@ -82,6 +82,7 @@ from mapreduce_framework_api_spark.registry import register
 from mapreduce_framework_api_spark.sources import (
     memoize,
     parallelized,
+    parquet_rows,
     peek_artifact,
     session_artifact,
     session_cache_key,
@@ -142,16 +143,7 @@ def _parquet_row_count(sf_dir: str, name: str) -> int:
     This sizes the block grid before the one real job runs; a cluster
     deployment pointed at object storage does the same footer listing (or
     uses catalog statistics)."""
-    import pyarrow.parquet as pq
-
-    path = os.path.join(sf_dir, f"{name}.parquet")
-    if os.path.isdir(path):
-        return sum(
-            pq.ParquetFile(os.path.join(path, f)).metadata.num_rows
-            for f in os.listdir(path)
-            if f.endswith(".parquet")
-        )
-    return pq.ParquetFile(path).metadata.num_rows
+    return parquet_rows(os.path.join(sf_dir, f"{name}.parquet"))
 
 
 def _hash_split(tag: str):
@@ -2060,10 +2052,14 @@ def _ivfpq_chain(
     # (rv, aliased piv so the codebook/encode CTEs read either source
     # unchanged); the encoded source swaps from pqe to rv, queries stay
     # raw (asymmetric distance).
-    res_ctes = f""", seedc AS (
+    # The residual trainer reads seedc, rv, xm and each Lloyd pass's
+    # rd/rn/cbm CTEs more than once; DuckDB inlines a CTE at every
+    # reference unless it is MATERIALIZED, which re-ran the whole chain.
+    mat = "MATERIALIZED " if residual else ""
+    res_ctes = f""", seedc AS MATERIALIZED (
   SELECT ROW_NUMBER() OVER (ORDER BY s.vec_id) - 1 AS c, p.piv
   FROM seed s JOIN pqe p USING (vec_id)
-), rv AS (
+), rv AS MATERIALIZED (
   SELECT p.vec_id,
          list_transform(range(1, len(p.piv) + 1),
                         i -> p.piv[i] - sc.piv[i]) AS piv
@@ -2095,9 +2091,9 @@ def _ivfpq_chain(
 
     if residual:
         assert SUB == 2, "residual codebook trainer is specialized to SUB=2"
-        cb_ctes = [f"cbm0 AS (\n  {split}\n  FROM pqcb CROSS JOIN ms\n)"]
+        cb_ctes = [f"cbm0 AS MATERIALIZED (\n  {split}\n  FROM pqcb CROSS JOIN ms\n)"]
         for t in range(_RES_CB_ITERS):
-            cb_ctes.append(f"""rd{t} AS (
+            cb_ctes.append(f"""rd{t} AS MATERIALIZED (
   SELECT vec_id, m, k FROM (
     SELECT x.vec_id, x.m, c.k,
            ROW_NUMBER() OVER (PARTITION BY x.vec_id, x.m
@@ -2107,12 +2103,12 @@ def _ivfpq_chain(
                               c.k ASC) AS rk
     FROM xm x JOIN cbm{t} c ON x.m = c.m
   ) WHERE rk = 1
-), rn{t} AS (
+), rn{t} AS MATERIALIZED (
   SELECT r.m, r.k, COUNT(*) AS n,
          SUM(x.x[1]) AS s1, SUM(x.x[2]) AS s2
   FROM rd{t} r JOIN xm x ON x.vec_id = r.vec_id AND x.m = r.m
   GROUP BY r.m, r.k
-), cbm{t + 1} AS (
+), cbm{t + 1} AS MATERIALIZED (
   SELECT c0.m, c0.k,
          CASE WHEN rn.n IS NULL THEN c0.c
               ELSE [{fd('rn.s1', 'rn.n')}, {fd('rn.s2', 'rn.n')}]
@@ -2150,7 +2146,7 @@ def _ivfpq_chain(
   SELECT ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS k, piv FROM pqseed
 ), ms AS (
   SELECT unnest(range(0, {M})) AS m
-), xm AS (
+), xm AS {mat}(
   SELECT vec_id, m, piv[m * {SUB} + 1 : m * {SUB} + {SUB}] AS x
   FROM {enc_src} CROSS JOIN ms
 ), {cbm_ctes}, d AS (

@@ -77,7 +77,8 @@ def get_spark(
 def clear_session_caches() -> None:
     """Drop every session artifact (sources.readers' one memo: the
     localCheckpoint'd shared tables, corpus and ANN indexes, tier
-    outputs, trainer runs, lazy scan handles).
+    outputs, trainer runs, lazy scan handles) and the memo's per-key
+    build locks.
 
     Callers: tests that need a query to genuinely RE-EXECUTE inside one
     application — e.g. the partitioning-invariance suite, which re-runs
@@ -89,3 +90,4 @@ def clear_session_caches() -> None:
     from mapreduce_framework_api_spark.sources import readers
 
     readers._SESSION_ARTIFACTS.clear()
+    readers._ARTIFACT_LOCKS.clear()

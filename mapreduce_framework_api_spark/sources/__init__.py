@@ -3,6 +3,7 @@ from mapreduce_framework_api_spark.sources.readers import (
     fixture_fingerprint,
     memoize,
     parallelized,
+    parquet_rows,
     peek_artifact,
     seed_artifact,
     session_artifact,
@@ -11,4 +12,4 @@ from mapreduce_framework_api_spark.sources.readers import (
 )
 
 __all__ = ["table", "TABLES", "parallelized", "session_cache_key", "fixture_fingerprint",
-           "session_artifact", "memoize", "peek_artifact", "seed_artifact"]
+           "session_artifact", "memoize", "peek_artifact", "seed_artifact", "parquet_rows"]

@@ -20,6 +20,7 @@ from __future__ import annotations
 import functools
 import inspect
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -62,6 +63,20 @@ def fixture_fingerprint(sf_dir: str, name: str) -> tuple:
     return (("missing", 0, 0),)
 
 
+def parquet_rows(path: str) -> int:
+    """Row count of a parquet file, or of a directory of part files, from
+    footer metadata: a driver-side read, no Spark job and no data scan."""
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        return sum(
+            pq.read_metadata(os.path.join(path, f)).num_rows
+            for f in os.listdir(path)
+            if f.endswith(".parquet")
+        )
+    return pq.read_metadata(path).num_rows
+
+
 def session_cache_key(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
     """The session part of every memo key (``session_artifact``):
     (applicationId, abspath(sf_dir), input-table fingerprints). One
@@ -81,15 +96,36 @@ def session_cache_key(spark: SparkSession, sf_dir: str, *names: str) -> tuple:
 # artifact store (operators/artifacts.py). A stored None is an entry like
 # any other: an empty-corpus result is not rebuilt.
 _SESSION_ARTIFACTS: dict[tuple, object] = {}
+# One lock per key being built, so concurrent callers (the artifact
+# store's persist pool) build a shared prerequisite once.
+_ARTIFACT_LOCKS: dict[tuple, threading.Lock] = {}
+_LOCKS_GUARD = threading.Lock()
 
 
 def memoize(key: tuple, build):
     """The memo entry for ``key``; on a miss, ``build()`` runs and its
-    result is stored. The probe precedes any of the builder's work."""
-    if key in _SESSION_ARTIFACTS:
+    result is stored. The probe precedes any of the builder's work.
+
+    Single-flight: a miss takes ``key``'s own lock and probes again, so
+    threads that miss on one key together wait for the first one's build
+    and share its result. Builds of different keys run in parallel; a
+    builder that needs another artifact takes that key's lock while
+    holding its own, which cannot deadlock because builders call each
+    other acyclically. A build that raises stores nothing, and the next
+    caller builds again."""
+    try:
         return _SESSION_ARTIFACTS[key]
-    out = _SESSION_ARTIFACTS[key] = build()
-    return out
+    except KeyError:
+        pass
+    with _LOCKS_GUARD:
+        lock = _ARTIFACT_LOCKS.setdefault(key, threading.Lock())
+    with lock:
+        try:
+            return _SESSION_ARTIFACTS[key]
+        except KeyError:
+            pass
+        out = _SESSION_ARTIFACTS[key] = build()
+        return out
 
 
 def peek_artifact(key: tuple):

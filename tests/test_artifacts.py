@@ -35,6 +35,16 @@ def _assert_served_from_store(spark, *builders):
         assert builder(spark, SF_DIR) is seeded, builder.__name__
 
 
+def _assert_rows_match_store(spark, store, manifest_name):
+    """The manifest's row counts (summed from the written footers) must
+    equal what Spark reads back from every stored frame."""
+    with open(os.path.join(store, manifest_name)) as f:
+        rows = json.load(f)["rows"]
+    assert rows
+    for name, n in rows.items():
+        assert spark.read.parquet(os.path.join(store, name)).count() == n, name
+
+
 def test_artifact_store_roundtrip_serves_queries(spark, tmp_path):
     """persist → clear caches → load → every query downstream of a
     persisted artifact returns byte-identical results while the kernels
@@ -60,6 +70,7 @@ def test_artifact_store_roundtrip_serves_queries(spark, tmp_path):
             "bk_pairs",
         }
         assert all(n > 0 for n in counts.values()), counts
+        _assert_rows_match_store(spark, store, "manifest.json")
 
         clear_session_caches()
         loaded = load_dedup_artifacts(spark, SF_DIR, store)
@@ -135,6 +146,7 @@ def test_ingest_index_store_roundtrip_serves_all_four_lanes(spark, tmp_path):
         counts = persist_ingest_indexes(spark, SF_DIR, store)
         assert counts and all(n >= 0 for n in counts.values())
         assert counts["minhash_sigs"] > 0 and counts["bk_corpus_sk"] > 0
+        _assert_rows_match_store(spark, store, "index_manifest.json")
 
         clear_session_caches()
         loaded_counts = load_ingest_indexes(spark, SF_DIR, store)
@@ -292,6 +304,7 @@ def test_ann_store_roundtrip_serves_all_tiers(spark, tmp_path):
             "maxsim_tokens",
         }
         assert all(n > 0 for n in counts.values()), counts
+        _assert_rows_match_store(spark, store, "ann_manifest.json")
 
         clear_session_caches()
         loaded = load_ann_indexes(spark, SF_DIR, store)
@@ -400,6 +413,80 @@ def test_second_concurrent_writer_errors_cleanly(spark, tmp_path):
         os.unlink(lock)  # writer #1 done (or stranded lock removed)
         persist_dedup_artifacts(spark, SF_DIR, store)
         assert not os.path.exists(lock)  # released on success
+    finally:
+        clear_session_caches()
+
+
+def test_failed_ann_persist_waits_for_inflight_writes_and_writes_no_manifest(
+    spark, tmp_path, monkeypatch
+):
+    """The concurrent persist's failure contract: when one frame's build
+    raises, that exception propagates — after the builds and writes
+    already running have finished, and before the writer guard releases
+    the lock — and no manifest is written. A retry then succeeds."""
+    import time
+
+    from mapreduce_framework_api_spark.operators import similarity
+    from mapreduce_framework_api_spark.operators.artifacts import (
+        load_ann_indexes,
+        persist_ann_indexes,
+    )
+
+    store = str(tmp_path / "ann_idx")
+    err = RuntimeError("simulated pq_hq build failure")
+
+    def boom(*_a, **_k):
+        raise err
+
+    vec_norm_table = similarity.vec_norm_table
+
+    def slow_vec_norm_table(spark, sf_dir):
+        time.sleep(1.0)  # still building when the failure lands
+        return vec_norm_table(spark, sf_dir)
+
+    clear_session_caches()
+    try:
+        monkeypatch.setattr(similarity, "pq_hq_index", boom)
+        monkeypatch.setattr(similarity, "vec_norm_table", slow_vec_norm_table)
+        with pytest.raises(RuntimeError) as raised:
+            persist_ann_indexes(spark, SF_DIR, store)
+        assert raised.value is err
+        monkeypatch.undo()
+        # the first task was running when pq_hq failed: its write finished
+        # before the exception left the persist
+        assert os.path.exists(os.path.join(store, "vec_norms", "_SUCCESS"))
+        assert not os.path.exists(os.path.join(store, "ann_manifest.json"))
+        assert not os.path.exists(os.path.join(store, "ann_manifest.json.lock"))
+
+        counts = persist_ann_indexes(spark, SF_DIR, store)
+        clear_session_caches()
+        assert load_ann_indexes(spark, SF_DIR, store) == counts
+    finally:
+        clear_session_caches()
+
+
+def test_persist_jobs_stay_in_the_callers_job_group(spark, tmp_path):
+    """Builds and writes run on pool threads, yet every Spark job a
+    persist fires carries the calling thread's job group (the tracer's
+    per-operation attribution depends on it)."""
+    from conftest import clear_job_group, job_fence
+
+    store = str(tmp_path / "artifacts")
+    sc = spark.sparkContext
+    group = "persist-dedup-attribution"
+    clear_session_caches()  # so the builds fire their jobs on the pool
+    try:
+        before = job_fence(spark)
+        sc.setJobGroup(group, group)
+        try:
+            persist_dedup_artifacts(spark, SF_DIR, store)
+        finally:
+            clear_job_group(spark)
+        after = job_fence(spark)
+        fired = set(range(before + 1, after))
+        grouped = set(sc.statusTracker().getJobIdsForGroup(group))
+        assert fired, "the persist fired no Spark job"
+        assert fired <= grouped, sorted(fired - grouped)
     finally:
         clear_session_caches()
 

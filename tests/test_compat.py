@@ -63,6 +63,36 @@ def test_map_error_fails_job(spark, tmp_path):
         job.result()
 
 
+def test_start_is_lazy_and_map_errors_surface_at_result(spark, tmp_path):
+    """``start`` only builds the plan (the module's mr_start row says
+    lazy), also with several partitions, where a sortByKey in the plan
+    would fire a range-sampling job. So a raising map_fn surfaces at
+    ``result()``, not at ``start()``."""
+    from conftest import clear_job_group, job_fence
+
+    p = tmp_path / "in.txt"
+    p.write_text("b a\nboom c\n" * 50)
+
+    def map_fn(idx, lines):
+        for line in lines:
+            if "boom" in line:
+                raise ValueError("map failure")
+            yield from ((tok, 1) for tok in line.split())
+
+    sc = spark.sparkContext
+    before = job_fence(spark)
+    sc.setJobGroup("mr-lazy-start", "mr-lazy-start")
+    try:
+        job = mr_create(map_fn, lambda a, b: a + b, partitions=4).start(spark, str(p))
+    finally:
+        clear_job_group(spark)
+    after = job_fence(spark)
+    assert after == before + 1, "start() fired a Spark job"
+    assert sc.statusTracker().getJobIdsForGroup("mr-lazy-start") == []
+    with pytest.raises(Exception, match="map failure"):
+        job.result()
+
+
 def test_start_required_before_finish():
     job = mr_create(lambda i, ls: [], lambda a, b: a)
     with pytest.raises(RuntimeError):

@@ -2155,6 +2155,51 @@ def test_empty_corpus_none_result_is_memoized(spark, tmp_path, monkeypatch):
         clear_session_caches()
 
 
+def test_session_artifact_builds_once_under_concurrent_callers(spark):
+    """The memo is single-flight: threads that miss on one key together
+    (the artifact store's persist pool needing a shared prerequisite)
+    wait for one build and all get its result."""
+    import sys
+    import threading
+    import time
+
+    from conftest import SF_DIR
+
+    from mapreduce_framework_api_spark.sources import session_artifact
+
+    calls = []
+
+    @session_artifact("documents")
+    def shared_prerequisite(spark, sf_dir):
+        calls.append(threading.get_ident())
+        time.sleep(0.2)  # keep the build open while the others arrive
+        return object()
+
+    n = 16  # more callers than cores
+    barrier = threading.Barrier(n, timeout=60)
+    got = [None] * n
+
+    def caller(i):
+        barrier.wait()
+        got[i] = shared_prerequisite(spark, SF_DIR)
+
+    clear_session_caches()
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)  # interleave the callers' probes densely
+    try:
+        threads = [threading.Thread(target=caller, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+        assert not any(t.is_alive() for t in threads)
+        assert len(calls) == 1, calls
+        assert got[0] is not None and all(g is got[0] for g in got)
+    finally:
+        sys.setswitchinterval(switch)
+        clear_session_caches()
+
+
 def test_containment_catches_inclusion_jaccard_misses(spark):
     """q_dedup_containment on the adversarial corpus: doc 11 is a literal
     prefix of doc 12, so every trigram of 11 appears in 12 — containment
